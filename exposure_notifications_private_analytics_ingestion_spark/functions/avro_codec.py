@@ -28,11 +28,14 @@ Record shape (PrioSerializationHelper.java:106-121):
 from __future__ import annotations
 
 import io
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 PACKET_AVRO_SCHEMA_JSON = """
 {"type":"record","name":"PrioDataSharePacket","fields":[
@@ -386,6 +389,84 @@ def _read_container_raising(blob: bytes) -> tuple[dict, list[dict]]:
     return {k: v for k, v in meta.items()}, records
 
 
+MANIFEST_SCHEMA = T.StructType(
+    [
+        T.StructField("batch_id", T.StringType()),
+        T.StructField("destination", T.StringType()),
+        T.StructField("path", T.StringType()),
+        T.StructField("n_records", T.LongType()),
+        T.StructField("file_sha256", T.StringType()),
+    ]
+)
+
+
+def group_runs(batches: Iterable[pa.RecordBatch]) -> Iterator[tuple[tuple, pa.Table]]:
+    """((batch_id, destination), rows) for each run of equal keys in Arrow
+    batches sorted by them. A run that straddles a batch boundary is carried
+    into the next batch, so every key comes out exactly once with all of its
+    rows."""
+    key, pieces = None, []
+    for rb in batches:
+        ks = list(zip(rb.column("batch_id").to_pylist(), rb.column("destination").to_pylist()))
+        start = 0
+        for i in range(1, len(ks) + 1):
+            if i < len(ks) and ks[i] == ks[start]:
+                continue
+            if ks[start] != key:
+                if pieces:
+                    yield key, pa.Table.from_batches(pieces)
+                key, pieces = ks[start], []
+            pieces.append(rb.slice(start, i - start))
+            start = i
+    if pieces:
+        yield key, pa.Table.from_batches(pieces)
+
+
+def encode_container(group: pa.Table, batch_id: str, destination: str) -> bytes:
+    """One (batch, destination)'s packets, in row order, as an
+    object-container file with the batch's deterministic sync marker — the
+    group writer both container paths share (``write_batch_containers`` and
+    the ingestion run's writer pass)."""
+    cols = [group.column(f).to_pylist() for f in PACKET_FIELDS]
+    recs = [
+        encode_packet(u, k, 0 if r is None else int(r), v, n, b"" if p is None else p)
+        for u, k, r, v, n, p in zip(*cols)
+    ]
+    return write_container(recs, sync=container_sync_marker(f"{batch_id}|{destination}"))
+
+
+def write_file_atomic(path: str, blob: bytes) -> None:
+    """Write through a temp name carrying the task attempt id, then rename:
+    readers never see a partial file, and a retried or speculative attempt
+    never shares another attempt's temp file."""
+    import os
+
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()
+    tmp = f"{path}.{tc.taskAttemptId() if tc else os.getpid()}.tmp"
+    with open(tmp, "wb") as f:
+        f.write(blob)
+    os.replace(tmp, path)
+
+
+def container_dir(root: str, destination: str, conv: str | None, ts_path: str | None) -> str:
+    """``{root}/{dest}/{name}/YYYY/MM/dd/HH/mm`` when windowed (the
+    reference's BatchWriterFn.java:135-150 layout), else ``{root}/{dest}``."""
+    import os
+
+    if ts_path is None:
+        return os.path.join(root, destination)
+    return os.path.join(root, destination, conv, ts_path)
+
+
+def utc_ts_path(window_start_s: int) -> str:
+    """The container layout's ``YYYY/MM/dd/HH/mm`` of a window start, in UTC."""
+    from datetime import datetime, timezone
+
+    return datetime.fromtimestamp(window_start_s, tz=timezone.utc).strftime("%Y/%m/%d/%H/%M")
+
+
 def write_batch_containers(
     packets: DataFrame, output_root: str, window_start_s: int | None = None
 ) -> DataFrame:
@@ -404,33 +485,15 @@ def write_batch_containers(
     import hashlib
     import os
 
-    out_schema = T.StructType(
-        [
-            T.StructField("batch_id", T.StringType()),
-            T.StructField("destination", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("n_records", T.LongType()),
-            T.StructField("file_sha256", T.StringType()),
-        ]
-    )
-
     windowed = window_start_s is not None and "conv_id" in packets.columns
-    ts_path = None
-    if windowed:
-        from datetime import datetime, timezone
-
-        ts_path = datetime.fromtimestamp(
-            window_start_s, tz=timezone.utc
-        ).strftime("%Y/%m/%d/%H/%M")
+    ts_path = utc_ts_path(window_start_s) if windowed else None
 
     # Plan shape: ONE shuffle keyed by (batch_id, destination), records
     # sorted within partitions so each batch's rows arrive consecutively,
-    # then a mapInPandas STREAM writes group-by-group with a carry buffer
-    # across Arrow batches. This replaces the per-group applyInPandas form:
-    # at ~12-row batches (the reference's per-conv batching) a 32k-group
-    # window paid one Arrow round-trip per group — measured 26.8 s vs 3.0 s
-    # for this form on identical input, byte-identical output (round-5 A/B:
-    # every file_sha256 equal).
+    # then a mapInArrow STREAM writes group-by-group (``group_runs`` carries
+    # a group across Arrow batches). This replaces the per-group
+    # applyInPandas form: at ~12-row batches (the reference's per-conv
+    # batching) a 32k-group window paid one Arrow round-trip per group.
     cols = ["batch_id", "destination", *PACKET_FIELDS]
     if windowed:
         cols.append("conv_id")
@@ -439,59 +502,30 @@ def write_batch_containers(
         .repartition("batch_id", "destination")
         .sortWithinPartitions("batch_id", "destination", "uuid")
     )
+    out_schema = to_arrow_schema(MANIFEST_SCHEMA)
 
-    def _write_group(batch_id, destination, conv, rows):
-        recs = [
-            encode_packet(
-                u,
-                k if pd.notna(k) else None,
-                int(r) if pd.notna(r) else 0,
-                v if pd.notna(v) else None,
-                bytes(n) if n is not None else None,
-                bytes(p) if p is not None else b"",
-            )
-            for u, k, r, v, n, p in rows
-        ]
-        blob = write_container(
-            recs, sync=container_sync_marker(f"{batch_id}|{destination}")
-        )
-        if windowed:
-            d = os.path.join(output_root, destination, conv, ts_path)
-        else:
-            d = os.path.join(output_root, destination)
-        os.makedirs(d, exist_ok=True)
-        path = os.path.join(d, f"{batch_id}.batch.avro")
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, path)  # atomic per-file commit
-        return (batch_id, destination, path, len(recs),
-                hashlib.sha256(blob).hexdigest())
-
-    names = [f.name for f in out_schema.fields]
-
-    def _gen(batches):
-        cur_key = None
-        conv = None
+    def _write(batches):
         rows = []
-        out = []
-        for pdf in batches:
-            for t in pdf.itertuples(index=False):
-                key = (t.batch_id, t.destination)
-                if key != cur_key:
-                    if cur_key is not None:
-                        out.append(_write_group(*cur_key, conv, rows))
-                    cur_key, rows = key, []
-                    conv = str(t.conv_id) if windowed else None
-                rows.append((t.uuid, t.encryption_key_id, t.r_pit,
-                             t.version_configuration, t.device_nonce,
-                             t.encrypted_payload))
-                if len(out) >= 256:
-                    yield pd.DataFrame(out, columns=names)
-                    out = []
-        if cur_key is not None:
-            out.append(_write_group(*cur_key, conv, rows))
-        if out:
-            yield pd.DataFrame(out, columns=names)
+        for (batch_id, destination), group in group_runs(batches):
+            blob = encode_container(group, batch_id, destination)
+            conv = str(group.column("conv_id")[0].as_py()) if windowed else None
+            d = container_dir(output_root, destination, conv, ts_path)
+            os.makedirs(d, exist_ok=True)
+            path = os.path.join(d, f"{batch_id}.batch.avro")
+            write_file_atomic(path, blob)
+            rows.append(
+                {
+                    "batch_id": batch_id,
+                    "destination": destination,
+                    "path": path,
+                    "n_records": group.num_rows,
+                    "file_sha256": hashlib.sha256(blob).hexdigest(),
+                }
+            )
+            if len(rows) >= 256:
+                yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
+                rows = []
+        if rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
 
-    return src.mapInPandas(_gen, schema=out_schema)
+    return src.mapInArrow(_write, schema=MANIFEST_SCHEMA)

@@ -4,10 +4,10 @@ Reference parity: ``model/DataShare.from()`` (``model/DataShare.java:109-272``)
 validates one Firestore document at a time, throwing
 ``InvalidDataShareException`` per failure class; the DoFn catches, counts, and
 drops (``model/DataShare.java:316-332``). Here the whole check chain is a
-single Catalyst ``when`` cascade (whole-stage codegen, no Python), producing an
+single Catalyst ``CASE WHEN`` cascade (whole-stage codegen, no Python), producing an
 ``invalid_reason`` column; dropping + per-class counting are then plain
 ``filter`` / ``groupBy`` — counters come for free as a DataFrame instead of
-Beam metric side-channels.
+Beam metric side-channels — or an ``Observation`` on the scan itself.
 
 rpit (``model/DataShare.java:190-205,368-383``) is a random field element of
 ``[0, PRIME)`` that is not an n-th root of unity for ``n = nextPow2(bins+1)``.
@@ -24,7 +24,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -32,80 +32,91 @@ from .schema import LATEST_SCHEMA_VERSION, MIN_SCHEMA_VERSION, NUMBER_OF_SERVERS
 
 _B64_RE = r"^[A-Za-z0-9+/]*={0,2}$"
 
+# The full DataShare.from() check chain, in order: the first failing check
+# names the row's reason. Check order mirrors model/DataShare.java:109-272:
+# payload → created → schemaVersion → prioParams(prime/epsilon/bins/
+# numberServers) → encryptedDataShares → signature → certificateChain.
+# SQL text, so the driver builds the whole cascade in one call rather than
+# one JVM round trip per column expression.
+PAYLOAD_CHECKS = (
+    (
+        "missing_payload",
+        "schema_version IS NULL AND prio_params IS NULL AND encrypted_shares IS NULL",
+    ),
+    ("missing_created", "ts IS NULL"),
+    ("missing_schema_version", "schema_version IS NULL"),
+    (
+        "invalid_schema_version",
+        f"schema_version < {MIN_SCHEMA_VERSION} OR schema_version > {LATEST_SCHEMA_VERSION}",
+    ),
+    ("missing_prio_params", "prio_params IS NULL"),
+    ("missing_prime", "prio_params.prime IS NULL"),
+    ("wrong_prime", f"prio_params.prime != {PRIME}"),
+    ("missing_epsilon", "prio_params.epsilon IS NULL"),
+    ("invalid_bins", "prio_params.bins IS NULL OR prio_params.bins < 0"),
+    (
+        "wrong_number_servers",
+        "prio_params.number_servers IS NULL"
+        f" OR prio_params.number_servers != {NUMBER_OF_SERVERS}",
+    ),
+    (
+        "share_count_mismatch",
+        "encrypted_shares IS NULL OR size(encrypted_shares) != prio_params.number_servers",
+    ),
+    (
+        "missing_encryption_key_id",
+        "NOT forall(encrypted_shares,"
+        " s -> s.encryption_key_id IS NOT NULL AND length(s.encryption_key_id) > 0)",
+    ),
+    (
+        "invalid_base64_payload",
+        "NOT forall(encrypted_shares, s -> s.payload IS NOT NULL"
+        f" AND s.payload RLIKE '{_B64_RE}' AND length(s.payload) % 4 = 0)",
+    ),
+    ("missing_signature", "signature IS NULL"),
+    ("missing_cert_chain", "cert_chain IS NULL OR size(cert_chain) = 0"),
+)
+# plain transcript turns (no encrypted_shares): a turn needs its timestamp
+# and its text
+PLAIN_CHECKS = (
+    ("missing_created", "ts IS NULL"),
+    ("missing_payload", "text IS NULL"),
+)
 
-def _is_b64(col: Column) -> Column:
-    return col.isNotNull() & col.rlike(_B64_RE) & (F.length(col) % 4 == 0)
+
+def _checks(df: DataFrame) -> tuple[tuple[str, str], ...]:
+    return PAYLOAD_CHECKS if "encrypted_shares" in df.columns else PLAIN_CHECKS
 
 
-def invalid_reason_col() -> Column:
-    """The full DataShare.from() check chain as one when-cascade.
-
-    Check order mirrors model/DataShare.java:109-272: payload → created →
-    schemaVersion → prioParams(prime/epsilon/bins/numberServers) →
-    encryptedDataShares → signature → certificateChain.
-    """
-    payload_missing = (
-        F.col("schema_version").isNull()
-        & F.col("prio_params").isNull()
-        & F.col("encrypted_shares").isNull()
-    )
-    return (
-        F.when(payload_missing, F.lit("missing_payload"))
-        .when(F.col("ts").isNull(), F.lit("missing_created"))
-        .when(F.col("schema_version").isNull(), F.lit("missing_schema_version"))
-        .when(
-            (F.col("schema_version") < MIN_SCHEMA_VERSION)
-            | (F.col("schema_version") > LATEST_SCHEMA_VERSION),
-            F.lit("invalid_schema_version"),
-        )
-        .when(F.col("prio_params").isNull(), F.lit("missing_prio_params"))
-        .when(F.col("prio_params.prime").isNull(), F.lit("missing_prime"))
-        .when(F.col("prio_params.prime") != PRIME, F.lit("wrong_prime"))
-        .when(F.col("prio_params.epsilon").isNull(), F.lit("missing_epsilon"))
-        .when(
-            F.col("prio_params.bins").isNull() | (F.col("prio_params.bins") < 0),
-            F.lit("invalid_bins"),
-        )
-        .when(
-            F.col("prio_params.number_servers").isNull()
-            | (F.col("prio_params.number_servers") != NUMBER_OF_SERVERS),
-            F.lit("wrong_number_servers"),
-        )
-        .when(
-            F.col("encrypted_shares").isNull()
-            | (F.size("encrypted_shares") != F.col("prio_params.number_servers")),
-            F.lit("share_count_mismatch"),
-        )
-        .when(
-            ~F.forall(
-                "encrypted_shares",
-                lambda s: s["encryption_key_id"].isNotNull()
-                & (F.length(s["encryption_key_id"]) > 0),
-            ),
-            F.lit("missing_encryption_key_id"),
-        )
-        .when(
-            ~F.forall("encrypted_shares", lambda s: _is_b64(s["payload"])),
-            F.lit("invalid_base64_payload"),
-        )
-        .when(F.col("signature").isNull(), F.lit("missing_signature"))
-        .when(
-            F.col("cert_chain").isNull() | (F.size("cert_chain") == 0),
-            F.lit("missing_cert_chain"),
-        )
-        .otherwise(F.lit(None).cast(T.StringType()))
-    )
+def invalid_reason_col(df: DataFrame) -> Column:
+    """The check chain of ``df``'s shape as one when-cascade (null ⇒ valid)."""
+    cases = " ".join(f"WHEN {cond} THEN '{reason}'" for reason, cond in _checks(df))
+    return F.expr(f"CASE {cases} END")
 
 
 def validate_turns(df: DataFrame) -> DataFrame:
     """Annotate with ``invalid_reason`` (null ⇒ valid). Pure, narrow, codegen'd."""
-    return df.withColumn("invalid_reason", invalid_reason_col())
+    return df.withColumn("invalid_reason", invalid_reason_col(df))
 
 
-def split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+def split_valid(
+    df: DataFrame, observation: Observation | None = None
+) -> tuple[DataFrame, DataFrame]:
     """(valid rows sans marker, per-class drop counts) — the counter analog of
-    model/DataShare.java:46-55."""
+    model/DataShare.java:46-55.
+
+    With ``observation``, the same counts also ride the scan as one
+    ``count_if`` per reason of the cascade, so a job that consumes ``valid``
+    gets them without a second pass over the input."""
     annotated = validate_turns(df)
+    if observation is not None:
+        annotated = annotated.observe(
+            observation,
+            *[
+                F.expr(f"count_if(invalid_reason = '{r}') AS {r}")
+                for r, _ in _checks(df)
+            ],
+        )
     valid = annotated.filter(F.col("invalid_reason").isNull()).drop("invalid_reason")
     counters = (
         annotated.filter(F.col("invalid_reason").isNotNull())

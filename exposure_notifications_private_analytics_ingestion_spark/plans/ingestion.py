@@ -9,24 +9,62 @@ batch-id → packet-split → Avro triplet write.
 ``IngestionPipeline.processDataShares`` (``:61-89``) which the reference unit
 tests drive directly (``IngestionPipelineTest.java:50-109``): pure
 ``DataFrame → (packets, headers, counters)``, no I/O. ``run_ingestion`` wraps
-it with scan + dual-destination sink.
+the same core with the scan and one writer pass.
 
-Plan shape at scale (the part the judge grades): the only shuffles are
-(1) the dedup hash-aggregate and (2) the per-key chunking; validation,
-window-filter, packet fan-out, and header digesting ride the same exchange.
-Catalyst pushes the window predicate into the scan (hour-partition pruning),
-and headers are a second aggregation over the already-partitioned packets —
-no extra wide exchange because packets are produced partitioned by batch key.
+Plan shape at scale: the core shuffles by key for dedup and chunking
+(one exchange on the fused path); validation, window filter, r_pit and the
+packet fan-out ride that exchange, and Catalyst pushes the window predicate into the
+scan (hour-partition pruning). The invalid-row counters are an
+``Observation`` on the validated scan. ``run_ingestion`` then runs ONE action:
+packets repartitioned by ``batch_id`` and sorted by
+``(batch_id, destination, uuid)`` feed a ``mapInArrow`` writer that handles
+each (batch, destination) group in turn — packet rows, header with
+``packet_file_digest`` (``build_headers``' definition), signature, and the
+``.batch.avro`` container with its SHA-256 — the per-batch step of the
+reference's ``BatchWriterFn.java:104-239``. Tasks stream every leg into a
+per-run staging tree, and the driver swaps it into place only after the
+action succeeded. ``build_headers`` / ``build_signatures`` /
+``sign_headers`` remain the DataFrame definitions of the same values.
 """
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
+import json
+import os
+import re
+import shutil
+import uuid
 from dataclasses import dataclass, field
+from datetime import datetime, timedelta, timezone
+from zoneinfo import ZoneInfo
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark import TaskContext
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..model.validate import split_valid
+from ..functions.avro_codec import (
+    MANIFEST_SCHEMA,
+    container_dir,
+    encode_container,
+    group_runs,
+    utc_ts_path,
+    write_file_atomic,
+)
+from ..functions.signing import (
+    KEYED_DIGEST_KEY_ID,
+    KEYED_DIGEST_SECRET,
+    digest_signer,
+    public_key_der_b64,
+)
+from ..model.validate import split_valid, with_rpit
 from ..operators.attestation import get_attestation
 from ..operators.batching import (
     assign_batches,
@@ -34,9 +72,9 @@ from ..operators.batching import (
     dedup_window_chunk,
 )
 from ..operators.dedup import dedup_turns_deterministic
-from ..operators.packets import split_packets
+from ..operators.packets import DESTINATIONS, split_packets, turn_uuid
 from ..operators.window_filter import window_filter
-from ..model.schema import NUMBER_OF_SERVERS, PRIME
+from ..model.schema import HEADERS_SCHEMA, NUMBER_OF_SERVERS, PRIME
 
 
 @dataclass
@@ -68,22 +106,14 @@ def process_turns(df: DataFrame, opts: IngestionOptions) -> tuple[DataFrame, Dat
 
     Returns (packets, headers, invalid_counters).
     """
-    has_payload = "encrypted_shares" in df.columns
-    if has_payload:
-        valid, counters = split_valid(df)
-    else:
-        valid = df.filter(F.col("ts").isNotNull() & F.col("text").isNotNull())
-        counters = (
-            df.filter(F.col("ts").isNull() | F.col("text").isNull())
-            .select(
-                F.when(F.col("ts").isNull(), F.lit("missing_created"))
-                .otherwise(F.lit("missing_payload"))
-                .alias("invalid_reason")
-            )
-            .groupBy("invalid_reason")
-            .agg(F.count("*").alias("n"))
-        )
+    valid, counters = split_valid(df)
+    packets = _packets(valid, opts)
+    return packets, build_headers(packets, opts), counters
 
+
+def _packets(valid: DataFrame, opts: IngestionOptions) -> DataFrame:
+    """dedup → window → (attest) → batch → r_pit → split, over validated rows."""
+    has_payload = "encrypted_shares" in valid.columns
     stage = get_attestation(opts.attestation)
 
     # K1 — the reference keys batches by the FULL stringified
@@ -143,13 +173,13 @@ def process_turns(df: DataFrame, opts: IngestionOptions) -> tuple[DataFrame, Dat
         # fork-consistency contract of IngestionPipelineIT.java:601-630).
         # Deterministic (md5-of-uuid rejection sampling) rather than
         # SecureRandom, so re-runs are idempotent.
-        from ..model.validate import with_rpit
-        from ..operators.packets import turn_uuid
-
         batched = with_rpit(batched, turn_uuid(), F.col("prio_params.bins"))
-    packets = split_packets(batched)
-    headers = build_headers(packets, opts)
-    return packets, headers, counters
+    return split_packets(batched)
+
+
+# header Prio metadata of plain transcript batches (ENPA deployment values),
+# in header column order
+PLAIN_PRIO_HEADER = {"bins": 2, "hamming_weight": 1, "prime": PRIME, "epsilon": 5.2933}
 
 
 def build_headers(packets: DataFrame, opts: IngestionOptions) -> DataFrame:
@@ -216,14 +246,12 @@ def build_headers(packets: DataFrame, opts: IngestionOptions) -> DataFrame:
             window_end.alias("batch_end_time"),
             F.lit(NUMBER_OF_SERVERS).alias("number_of_servers"),
             # header metadata reflects the batch's own prio_params when the
-            # input carries them (BatchWriterFn.java:152-176); the literals
-            # are the plain-transcript defaults (ENPA deployment values)
-            (F.col("_bins") if has_prio else F.lit(2)).alias("bins"),
-            (F.col("_hamming_weight") if has_prio else F.lit(1)).alias(
-                "hamming_weight"
-            ),
-            (F.col("_prime") if has_prio else F.lit(PRIME)).alias("prime"),
-            (F.col("_epsilon") if has_prio else F.lit(5.2933)).alias("epsilon"),
+            # input carries them (BatchWriterFn.java:152-176), else the
+            # plain-transcript defaults
+            *[
+                (F.col(f"_{c}") if has_prio else F.lit(v)).alias(c)
+                for c, v in PLAIN_PRIO_HEADER.items()
+            ],
             "packet_file_digest",
             F.concat_ws(
                 "/", F.col("destination"), F.col("name"), ts_path, F.col("batch_id")
@@ -235,17 +263,31 @@ def build_headers(packets: DataFrame, opts: IngestionOptions) -> DataFrame:
     return agg
 
 
+def packet_file_digest(uuids: list, payloads: list) -> str:
+    """``build_headers``' digest for one (batch, destination), in Python:
+    SHA-256 of the ``uuid:HEX(payload)`` texts sorted by (uuid, hex) and
+    concatenated. A row with a null side adds nothing, as ``concat_ws``
+    skips the null ``concat`` it makes."""
+    pairs = sorted(
+        (u, p.hex().upper())
+        for u, p in zip(uuids, payloads)
+        if u is not None and p is not None
+    )
+    return hashlib.sha256("".join(f"{u}:{h}" for u, h in pairs).encode()).hexdigest()
+
+
 def build_signatures(
     headers: DataFrame,
-    key_id: str = "sandbox-keyed-digest-v1",
-    secret: str = "enpa-sandbox-secret",
+    key_id: str = KEYED_DIGEST_KEY_ID,
+    secret: str = KEYED_DIGEST_SECRET,
 ) -> DataFrame:
     """W3 — batch-header signature file (``PrioBatchSignature``:
     ``pipeline/BatchWriterFn.java:225-239`` signs the header's SHA-256 via
     GCP KMS asymmetricSign). This is the LEGACY symmetric stand-in — a keyed
     digest ``sha256(secret | header_digest | secret)`` behind the same
-    (batch_id, signature, key_identifier) interface. Prefer the verifiable
-    asymmetric path: set ``IngestionOptions.signing_key_pem`` (see
+    (batch_id, signature, key_identifier) interface; ``digest_signer(None)``
+    computes the same value per digest. Prefer the verifiable asymmetric
+    path: set ``IngestionOptions.signing_key_pem`` (see
     ``functions/signing.py``), which signs with ECDSA P-256 and publishes
     the public key so downstream verifies without a shared secret."""
     sig = F.sha2(
@@ -262,35 +304,308 @@ def build_signatures(
     )
 
 
-def _write_triplet_leg(
-    df: DataFrame, path: str, is_empty: bool, window_start_s: int
-) -> None:
-    """One read-back layout for empty and non-empty windows.
+# the output legs the writer pass stages, in commit order; each is parquet
+# under {output_root}/{leg}/window_start_s=W/destination=D
+LEGS = ("packets", "batch_headers", "signatures", "avro_manifest")
+# columns no reader prunes on — hashes, signatures, payload bytes, file
+# paths — get no min/max statistics; they and the per-file unique uuid get
+# no dictionary (each value would be stored twice, once in the dictionary)
+_OPAQUE = {
+    "encrypted_payload",
+    "device_nonce",
+    "packet_file_digest",
+    "batch_header_signature",
+    "file_sha256",
+    "path",
+}
+_UNIQUE = _OPAQUE | {"uuid"}
+_ROW_GROUP_BYTES = 64 << 20
 
-    Non-empty: dynamic-overwrite hive partitions on
-    ``(window_start_s, destination)``. An empty partitioned overwrite would
-    leave a schema-less directory (UNABLE_TO_INFER_SCHEMA on read), so the
-    empty case writes one unpartitioned parquet file with the SAME schema a
-    partitioned read-back yields — data columns first, then ``window_start_s``
-    typed exactly as partition-value inference would type it (int when the
-    value fits, long otherwise) and ``destination`` — so readers that union
-    output across runs see a single schema either way.
-    """
-    part_cols = ["window_start_s", "destination"]
-    if is_empty:
-        data_cols = [c for c in df.columns if c not in part_cols]
-        ws_type = "int" if -(2**31) <= window_start_s < 2**31 else "long"
-        (
-            df.select(
-                *data_cols,
-                F.col("window_start_s").cast(ws_type).alias("window_start_s"),
-                F.col("destination").cast("string").alias("destination"),
+
+def _data_schema(schema: T.StructType) -> pa.Schema:
+    """Arrow schema of a leg's parquet files: the partition column
+    ``destination`` lives in the directory name, not in the file."""
+    return to_arrow_schema(
+        T.StructType([f for f in schema.fields if f.name != "destination"])
+    )
+
+
+def _parquet_writer(path: str, schema: pa.Schema) -> pq.ParquetWriter:
+    return pq.ParquetWriter(
+        path,
+        schema,
+        compression="snappy",
+        store_schema=False,
+        write_statistics=[n for n in schema.names if n not in _OPAQUE],
+        use_dictionary=[n for n in schema.names if n not in _UNIQUE],
+    )
+
+
+class _PartFile:
+    """One leg's parquet file for one destination of one task attempt,
+    buffered into row groups of about ``_ROW_GROUP_BYTES``."""
+
+    def __init__(self, path: str, schema: pa.Schema):
+        self.path, self.schema = path, schema
+        self.writer = _parquet_writer(path, schema)
+        self.tables: list[pa.Table] = []
+        self.rows: list[dict] = []
+        self.nbytes = 0
+
+    def add_table(self, table: pa.Table) -> None:
+        self.tables.append(table.select(self.schema.names).cast(self.schema))
+        self.nbytes += table.nbytes
+        if self.nbytes >= _ROW_GROUP_BYTES:
+            self.flush()
+
+    def add_row(self, row: dict) -> None:
+        self.rows.append(row)
+        if len(self.rows) >= 65536:
+            self.flush()
+
+    def flush(self) -> None:
+        if self.rows:
+            self.tables.append(pa.Table.from_pylist(self.rows, schema=self.schema))
+        if self.tables:
+            self.writer.write_table(pa.concat_tables(self.tables))
+        self.tables, self.rows, self.nbytes = [], [], 0
+
+    def close(self) -> None:
+        self.flush()
+        self.writer.close()
+
+
+def _mkdirs_in(root: str, path: str) -> None:
+    """``makedirs`` for a directory under ``root`` that never creates
+    ``root`` itself: once the driver has retired a run's staging tree, a
+    task still running from that run (killed, or a speculative copy) fails
+    instead of re-creating the tree."""
+    d = root
+    for part in os.path.relpath(path, root).split(os.sep):
+        d = os.path.join(d, part)
+        with contextlib.suppress(FileExistsError):
+            os.mkdir(d)
+
+
+def _leg_schemas(packets: DataFrame) -> dict[str, pa.Schema]:
+    """Each leg's file schema. The header and signature types are those
+    ``build_headers`` and ``build_signatures`` produce (pinned by tests),
+    written out here so no per-window plan is built just for a schema."""
+    return {
+        "packets": _data_schema(packets.schema),
+        "batch_headers": _data_schema(HEADERS_SCHEMA),
+        "signatures": _data_schema(
+            T.StructType(
+                [
+                    T.StructField(c, T.StringType())
+                    for c in ("batch_id", "batch_header_signature", "key_identifier")
+                ]
             )
-            .write.mode("overwrite")
-            .parquet(path)
+        ),
+        "avro_manifest": _data_schema(MANIFEST_SCHEMA),
+    }
+
+
+def _writer_pass(
+    spark: SparkSession,
+    packets: DataFrame,
+    opts: IngestionOptions,
+    schemas: dict[str, pa.Schema],
+    output_root: str,
+    staging: str,
+) -> list:
+    """The window's one action: every output leg written executor-side.
+
+    Packets are repartitioned by ``batch_id`` and sorted by
+    ``(batch_id, destination, uuid)``; a ``mapInArrow`` task walks its
+    (batch, destination) groups in turn and, per group, appends the packet
+    rows, the header (with ``packet_file_digest``), its signature and — with
+    containers on — the ``.batch.avro`` file and its manifest row. All of it
+    lands in ``staging`` at the layout of the final tree. Each task yields
+    one row: the files it wrote and its packet/batch/ts counts."""
+    ts_type = packets.schema["ts"].dataType
+    result = T.StructType(
+        [
+            T.StructField("files", T.ArrayType(T.StringType())),
+            T.StructField("packets", T.LongType()),
+            T.StructField("batches", T.LongType()),
+            T.StructField("min_ts", ts_type),
+            T.StructField("max_ts", ts_type),
+        ]
+    )
+    result_arrow = to_arrow_schema(result)
+    has_prio = "bins" in packets.columns
+    window_start, window_end = opts.window_start_s, opts.window_start_s + opts.duration_s
+    tz = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+    header_ts_path = datetime.fromtimestamp(window_start, tz=tz).strftime("%Y/%m/%d/%H/%M")
+    avro_ts_path = utc_ts_path(window_start)
+    emit_avro = opts.emit_avro_containers
+    pem = opts.signing_key_pem
+    key_id = KEYED_DIGEST_KEY_ID if pem is None else opts.signing_key_id
+    # bound here, so the shipped closure carries this exact function
+    encode = encode_container
+
+    def write(batches):
+        tc = TaskContext.get()
+        tag = f"part-{tc.partitionId():05d}-{tc.taskAttemptId()}"
+        sign = digest_signer(pem)
+        parts: dict[tuple[str, str], _PartFile] = {}
+
+        def part(leg: str, dest: str) -> _PartFile:
+            if (leg, dest) not in parts:
+                d = os.path.join(staging, leg, f"destination={dest}")
+                _mkdirs_in(staging, d)
+                parts[(leg, dest)] = _PartFile(os.path.join(d, f"{tag}.parquet"), schemas[leg])
+            return parts[(leg, dest)]
+
+        files, n_packets, batch_ids, lo, hi = [], 0, set(), None, None
+        for (batch_id, dest), group in group_runs(batches):
+            part("packets", dest).add_table(group)
+            name = group.column("conv_id")[0].as_py()
+            digest = packet_file_digest(
+                group.column("uuid").to_pylist(),
+                group.column("encrypted_payload").to_pylist(),
+            )
+            prio = (
+                {c: group.column(c)[0].as_py() for c in PLAIN_PRIO_HEADER}
+                if has_prio
+                else PLAIN_PRIO_HEADER
+            )
+            part("batch_headers", dest).add_row(
+                {
+                    "batch_id": batch_id,
+                    "name": name,
+                    "batch_start_time": window_start,
+                    "batch_end_time": window_end,
+                    "number_of_servers": NUMBER_OF_SERVERS,
+                    **prio,
+                    "packet_file_digest": digest,
+                    "path": f"{dest}/{name}/{header_ts_path}/{batch_id}",
+                    "n_packets": group.num_rows,
+                }
+            )
+            part("signatures", dest).add_row(
+                {
+                    "batch_id": batch_id,
+                    "batch_header_signature": sign(digest),
+                    "key_identifier": key_id,
+                }
+            )
+            if emit_avro:
+                blob = encode(group, batch_id, dest)
+                rel = os.path.join(
+                    container_dir("avro", dest, str(name), avro_ts_path),
+                    f"{batch_id}.batch.avro",
+                )
+                staged = os.path.join(staging, rel)
+                _mkdirs_in(staging, os.path.dirname(staged))
+                write_file_atomic(staged, blob)
+                files.append(staged)
+                part("avro_manifest", dest).add_row(
+                    {
+                        "batch_id": batch_id,
+                        "path": os.path.join(output_root, rel),
+                        "n_records": group.num_rows,
+                        "file_sha256": hashlib.sha256(blob).hexdigest(),
+                    }
+                )
+            n_packets += group.num_rows
+            batch_ids.add(batch_id)
+            mm = pc.min_max(group.column("ts"))
+            lo = mm["min"].as_py() if lo is None else min(lo, mm["min"].as_py())
+            hi = mm["max"].as_py() if hi is None else max(hi, mm["max"].as_py())
+        for p in parts.values():
+            p.close()
+            files.append(p.path)
+        if n_packets:
+            yield pa.RecordBatch.from_pylist(
+                [
+                    {
+                        "files": files,
+                        "packets": n_packets,
+                        "batches": len(batch_ids),
+                        "min_ts": lo,
+                        "max_ts": hi,
+                    }
+                ],
+                schema=result_arrow,
+            )
+
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # the EXPLICIT partition count pins the writer's parallelism: AQE
+    # coalesces a plain repartition(col) to advisory-sized partitions, which
+    # caps the pass well below the core count on large windows
+    return (
+        packets.repartition(n_part, "batch_id")
+        .sortWithinPartitions("batch_id", "destination", "uuid")
+        .mapInArrow(write, schema=result)
+        .collect()
+    )
+
+
+def _write_empty_legs(staging: str, legs: tuple[str, ...], schemas: dict) -> set[str]:
+    """An empty window's legs: one zero-row, full-schema file each, under a
+    real destination value — a null one would make partition discovery type
+    ``destination`` as void — so the window reads back like any other."""
+    paths = set()
+    for leg in legs:
+        path = os.path.join(
+            staging, leg, f"destination={DESTINATIONS[0]}", "part-00000-empty.parquet"
         )
-    else:
-        df.write.mode("overwrite").partitionBy(*part_cols).parquet(path)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        _parquet_writer(path, schemas[leg]).close()
+        paths.add(path)
+    return paths
+
+
+def _commit(
+    staging: str, output_root: str, opts: IngestionOptions, written: set[str]
+) -> None:
+    """Swap the staged window into the output tree, after the action
+    succeeded. Files of failed or speculative task attempts — anything the
+    successful attempts did not report — are dropped first. Each leg's
+    ``window_start_s=W`` directory is replaced whole (two renames each), and
+    this window's container subtrees ``avro/*/*/{YYYY/MM/dd/HH/mm}`` are
+    replaced by the staged ones; other windows are not touched."""
+    for base, _, names in os.walk(staging):
+        for n in names:
+            if os.path.join(base, n) not in written:
+                os.remove(os.path.join(base, n))
+    ws = f"window_start_s={opts.window_start_s}"
+    for leg in LEGS:
+        new = os.path.join(staging, leg)
+        if not os.path.isdir(new):
+            continue
+        final = os.path.join(output_root, leg, ws)
+        if os.path.isdir(final):  # the previous output leaves with the staging tree
+            os.rename(final, os.path.join(staging, f"replaced-{leg}"))
+        os.makedirs(os.path.dirname(final), exist_ok=True)
+        os.rename(new, final)
+    if opts.emit_avro_containers:
+        ts_path = utc_ts_path(opts.window_start_s)
+        for old in glob.glob(os.path.join(output_root, "avro", "*", "*", ts_path)):
+            shutil.rmtree(old)
+        staged_root = os.path.join(staging, "avro")
+        for new in glob.glob(os.path.join(staged_root, "*", "*", ts_path)):
+            final = os.path.join(output_root, "avro", os.path.relpath(new, staged_root))
+            os.makedirs(os.path.dirname(final), exist_ok=True)
+            os.rename(new, final)
+
+
+def _scan_hours(opts: IngestionOptions) -> list[str]:
+    """``ts_hour`` partitions of the window widened by the grace hours."""
+    lo = datetime.fromtimestamp(opts.window_start_s, tz=timezone.utc) - timedelta(
+        hours=opts.grace_hours_backwards
+    )
+    hi = datetime.fromtimestamp(
+        opts.window_start_s + opts.duration_s, tz=timezone.utc
+    ) + timedelta(hours=opts.grace_hours_forwards)
+    hours = []
+    cur = lo.replace(minute=0, second=0, microsecond=0)
+    while cur <= hi:
+        hours.append(cur.strftime("%Y-%m-%d-%H"))
+        cur += timedelta(hours=1)
+    return hours
 
 
 def run_ingestion(
@@ -298,168 +613,89 @@ def run_ingestion(
     input_path: str,
     output_root: str,
     opts: IngestionOptions,
-) -> dict[str, int]:
+) -> dict[str, int | str]:
     """Batch job: scan hour-partitioned turns (pruned to the window ± grace),
-    run the core, write packets + headers per destination.
+    run the core, write the output legs per destination in one pass.
 
-    Idempotence (W4 analog, strengthened per SURVEY §4): output is
-    repartitioned by batch_id and written with dynamic partition overwrite on
-    the destination partition — a re-run of the same window replaces exactly
-    its own output, never duplicates it.
+    Idempotence (W4 analog, strengthened per SURVEY §4): the run stages its
+    whole output and then replaces exactly its own window's partitions — a
+    re-run of the same window replaces its output, never duplicates it, and
+    a failed run leaves the previous output as it was. The output root must
+    be a local or mounted path: tasks write their files directly.
+
+    Returns the M2 counters: invalid rows per reason (non-zero only), and
+    ``packets_written``, ``batches_approx`` (exact), ``min_ts``, ``max_ts``
+    as strings.
     """
     df = spark.read.parquet(input_path)
+    scanned = True
     if "ts_hour" in df.columns:  # hour-partition pruning, ± grace (S1 analog)
-        from datetime import datetime, timedelta, timezone
-
-        lo = datetime.fromtimestamp(opts.window_start_s, tz=timezone.utc) - timedelta(
-            hours=opts.grace_hours_backwards
+        hours = set(_scan_hours(opts))
+        df = df.filter(F.col("ts_hour").isin(sorted(hours))).drop("ts_hour")
+        # a scan left with no file runs no task, and an Observation no task
+        # reported to has no value: detect that case here, from the listing
+        scanned = any(
+            m is not None and m.group(1) in hours
+            for m in (re.search(r"/ts_hour=([^/]+)/", f) for f in df.inputFiles())
         )
-        hi = datetime.fromtimestamp(
-            opts.window_start_s + opts.duration_s, tz=timezone.utc
-        ) + timedelta(hours=opts.grace_hours_forwards)
-        hours = []
-        cur = lo.replace(minute=0, second=0, microsecond=0)
-        while cur <= hi:
-            hours.append(cur.strftime("%Y-%m-%d-%H"))
-            cur += timedelta(hours=1)
-        df = df.filter(F.col("ts_hour").isin(hours)).drop("ts_hour")
+    obs = Observation("invalid")
+    valid, counters = split_valid(df, obs)
+    packets = _packets(valid, opts)
 
-    packets, _headers_unused, counters = process_turns(df, opts)
-
-    # M2 — observed counters riding the write action (Beam Metrics analog,
-    # model/DataShare.java:46-55, dump IngestionPipeline.java:140-155)
-    from pyspark.sql import Observation
-
-    obs = Observation("ingest")
-    packets = packets.observe(
-        obs,
-        F.count(F.lit(1)).alias("packets_written"),
-        F.approx_count_distinct("batch_id").alias("batches_approx"),
-        F.min("ts").alias("min_ts"),
-        F.max("ts").alias("max_ts"),
-    )
-    # persist the fan-out once: headers + signatures derive from it, and
-    # without the cache each write re-executes the whole core. The EXPLICIT
-    # partition count pins the shuffle width — AQE coalesces a plain
-    # repartition(col) to advisory-sized partitions, which caps the parquet
-    # write + digest parallelism well below the core count on large windows.
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    packets = (
-        packets.withColumn("window_start_s", F.lit(opts.window_start_s))
-        .repartition(n_part, "batch_id")
-        .persist()
-    )
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # empty-window hardening: a partitioned overwrite of zero rows leaves a
-    # schema-less directory (readers would raise UNABLE_TO_INFER_SCHEMA), so
-    # _write_triplet_leg writes the empty case unpartitioned WITH the same
-    # read-back schema as the partitioned layout (one schema across runs).
-    # take(1) is a cheap action against the already-persisted fan-out.
-    is_empty = len(packets.take(1)) == 0
-    _write_triplet_leg(
-        packets, f"{output_root}/packets", is_empty, opts.window_start_s
-    )
-    # headers/signatures derive from the CACHED fan-out (and the groupBy on
-    # (batch_id, destination) is exchange-free on the batch_id partitioning)
-    headers = build_headers(packets, opts).persist()
-    headers_out = headers.withColumn("window_start_s", F.lit(opts.window_start_s))
+    schemas = _leg_schemas(packets)
+    legs = LEGS if opts.emit_avro_containers else LEGS[:3]
+    # the run's private staging tree; readers of the legs never list it
+    staging = os.path.join(output_root, "_staging", uuid.uuid4().hex)
+    os.makedirs(staging)
+    try:
+        results = (
+            _writer_pass(spark, packets, opts, schemas, output_root, staging)
+            if scanned
+            else []
+        )
+        written = {f for r in results for f in r["files"]}
+        if not written:
+            written = _write_empty_legs(staging, legs, schemas)
+        _commit(staging, output_root, opts, written)
+    finally:
+        # Spark does not wait for the tasks it kills when an action fails:
+        # move the tree away first, so that one still running cannot write
+        # into it (see _mkdirs_in), then delete it
+        retired = f"{staging}.retired"
+        os.rename(staging, retired)
+        shutil.rmtree(retired, ignore_errors=True)
+        with contextlib.suppress(OSError):
+            os.rmdir(os.path.dirname(staging))
     if opts.signing_key_pem is not None:
-        import json as _json
-
-        from ..functions.signing import public_key_der_b64, sign_headers
-
-        signatures = sign_headers(
-            headers, opts.signing_key_pem, key_id=opts.signing_key_id
-        )
         # publish the verification material (key id + public key DER) —
         # the sandbox analog of the KMS key resource name the reference's
         # downstream resolves (IngestionPipelineIT.java:700-721)
-        import os as _os
-
-        _os.makedirs(output_root, exist_ok=True)
-        with open(f"{output_root}/signing_key.json", "w") as fh:
-            _json.dump(
+        with open(os.path.join(output_root, "signing_key.json"), "w") as fh:
+            json.dump(
                 {
                     "key_identifier": opts.signing_key_id,
-                    "public_key_der_b64": public_key_der_b64(
-                        opts.signing_key_pem
-                    ),
+                    "public_key_der_b64": public_key_der_b64(opts.signing_key_pem),
                 },
                 fh,
             )
+
+    # M2 counters (Beam Metrics analog, model/DataShare.java:46-55). The
+    # Observation is part of the final plan only when packets reached the
+    # writer: once a stage runs empty, AQE swaps the plan below it for an
+    # empty relation and the observed scan with it. An empty window
+    # therefore counts its invalid rows with one extra aggregation, and a
+    # window with no input file counts nothing.
+    if not scanned:
+        invalid = {}
+    elif results:
+        invalid = obs.get
     else:
-        signatures = build_signatures(headers)
-    signatures_out = signatures.withColumn(
-        "window_start_s", F.lit(opts.window_start_s)
+        invalid = {r["invalid_reason"]: r["n"] for r in counters.collect()}
+    stats: dict[str, int | str] = {r: n for r, n in invalid.items() if n}
+    stats.update(
+        packets_written=str(sum(r["packets"] for r in results)),
+        batches_approx=str(sum(r["batches"] for r in results)),
+        min_ts=str(min((r["min_ts"] for r in results), default=None)),
+        max_ts=str(max((r["max_ts"] for r in results), default=None)),
     )
-    _write_triplet_leg(
-        headers_out, f"{output_root}/batch_headers", is_empty, opts.window_start_s
-    )
-    # W3 — the signature leg of the reference's Avro triplet
-    _write_triplet_leg(
-        signatures_out, f"{output_root}/signatures", is_empty, opts.window_start_s
-    )
-    if opts.emit_avro_containers:
-        import glob as _glob
-        import shutil as _shutil
-        from datetime import datetime, timezone
-
-        from ..functions.avro_codec import write_batch_containers
-
-        # W4 idempotence for the container leg: batch membership can change
-        # between runs of the same window (different batch ids), and the
-        # per-file atomic replace only overwrites same-named files — so clear
-        # THIS WINDOW's subtrees ({dest}/{name}/YYYY/MM/dd/HH/mm) before
-        # rewriting; other windows' files are untouched.
-        ts_path = datetime.fromtimestamp(
-            opts.window_start_s, tz=timezone.utc
-        ).strftime("%Y/%m/%d/%H/%M")
-        for d in _glob.glob(f"{output_root}/avro/*/*/{ts_path}"):
-            _shutil.rmtree(d, ignore_errors=True)
-        # ... and THIS WINDOW's manifest partition with them: the dynamic
-        # overwrite below only replaces (window, destination) partitions
-        # present in the NEW run, so a destination that vanished between
-        # runs would otherwise leave manifest rows pointing at files the
-        # rmtree above just deleted — and the manifest-driven read fast
-        # path (sources/avro_packets.py) would fail on ghosts the
-        # directory scan no longer contains.
-        _shutil.rmtree(
-            f"{output_root}/avro_manifest/window_start_s={opts.window_start_s}",
-            ignore_errors=True,
-        )
-
-        manifest = write_batch_containers(
-            packets, f"{output_root}/avro", window_start_s=opts.window_start_s
-        ).withColumn("window_start_s", F.lit(opts.window_start_s))
-        # ADVICE r5 #1: an empty window must NOT take the empty-leg path for
-        # the manifest — that path overwrites the WHOLE directory with one
-        # empty unpartitioned file, and the manifest-driven read fast path
-        # would then silently hide every EARLIER window's (still on-disk)
-        # containers. This window's partition was already cleared by the
-        # rmtree above; an empty window simply contributes no manifest rows.
-        if not is_empty:
-            _write_triplet_leg(
-                manifest,
-                f"{output_root}/avro_manifest",
-                is_empty,
-                opts.window_start_s,
-            )
-    headers.unpersist()
-    packets.unpersist()
-    stats_rows = counters.collect()
-    stats = {r["invalid_reason"]: r["n"] for r in stats_rows}
-    try:
-        stats.update({k: str(v) for k, v in obs.get.items()})
-    except Exception:
-        # zero-task plans (everything pruned at the scan) never fire the
-        # observation; report explicit zeros instead of raising
-        stats.update(
-            {
-                "packets_written": "0",
-                "batches_approx": "0",
-                "min_ts": "None",
-                "max_ts": "None",
-            }
-        )
     return stats
