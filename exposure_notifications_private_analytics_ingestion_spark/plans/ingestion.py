@@ -34,11 +34,11 @@ import glob
 import hashlib
 import json
 import os
-import re
 import shutil
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
+from urllib.parse import unquote, urlsplit
 from zoneinfo import ZoneInfo
 
 import pyarrow as pa
@@ -564,32 +564,67 @@ def _commit(
     """Swap the staged window into the output tree, after the action
     succeeded. Files of failed or speculative task attempts — anything the
     successful attempts did not report — are dropped first. Each leg's
-    ``window_start_s=W`` directory is replaced whole (two renames each), and
-    this window's container subtrees ``avro/*/*/{YYYY/MM/dd/HH/mm}`` are
-    replaced by the staged ones; other windows are not touched."""
+    ``window_start_s=W`` directory and this window's container subtrees
+    ``avro/*/*/{YYYY/MM/dd/HH/mm}`` are replaced by the staged ones; other
+    windows are not touched. The previous output is moved into the staging
+    tree rather than deleted, so if any rename fails, the renames already
+    done are undone and the window reads back as before."""
     for base, _, names in os.walk(staging):
         for n in names:
             if os.path.join(base, n) not in written:
                 os.remove(os.path.join(base, n))
     ws = f"window_start_s={opts.window_start_s}"
-    for leg in LEGS:
-        new = os.path.join(staging, leg)
-        if not os.path.isdir(new):
-            continue
-        final = os.path.join(output_root, leg, ws)
-        if os.path.isdir(final):  # the previous output leaves with the staging tree
-            os.rename(final, os.path.join(staging, f"replaced-{leg}"))
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        os.rename(new, final)
+    swaps = [  # (final, staged); a missing staged path only removes final
+        (os.path.join(output_root, leg, ws), os.path.join(staging, leg))
+        for leg in LEGS
+        if os.path.isdir(os.path.join(staging, leg))
+    ]
     if opts.emit_avro_containers:
         ts_path = utc_ts_path(opts.window_start_s)
-        for old in glob.glob(os.path.join(output_root, "avro", "*", "*", ts_path)):
-            shutil.rmtree(old)
-        staged_root = os.path.join(staging, "avro")
-        for new in glob.glob(os.path.join(staged_root, "*", "*", ts_path)):
-            final = os.path.join(output_root, "avro", os.path.relpath(new, staged_root))
-            os.makedirs(os.path.dirname(final), exist_ok=True)
-            os.rename(new, final)
+        subtrees = {
+            os.path.relpath(p, root)
+            for root in (output_root, staging)
+            for p in glob.glob(os.path.join(root, "avro", "*", "*", ts_path))
+        }
+        swaps += [
+            (os.path.join(output_root, rel), os.path.join(staging, rel))
+            for rel in sorted(subtrees)
+        ]
+    replaced = os.path.join(staging, "replaced")
+    os.mkdir(replaced)
+    moved: list[tuple[str, str]] = []
+
+    def move(src: str, dst: str) -> None:
+        os.rename(src, dst)
+        moved.append((src, dst))
+
+    try:
+        for i, (final, new) in enumerate(swaps):
+            if os.path.isdir(final):
+                move(final, os.path.join(replaced, str(i)))
+            if os.path.isdir(new):
+                os.makedirs(os.path.dirname(final), exist_ok=True)
+                move(new, final)
+    except BaseException:
+        for src, dst in reversed(moved):
+            os.rename(dst, src)
+        raise
+
+
+def _local_root(output_root: str) -> str:
+    """``output_root`` as a local path. Tasks write their files straight
+    into it, so it must be a directory the driver and every executor share:
+    a local or mounted path, plain or as a ``file:`` URI. Any other scheme
+    (``hdfs://``, ``s3a://``) is refused — taken for a path, it would name a
+    relative directory on each executor's own disk."""
+    parts = urlsplit(output_root)
+    if not parts.scheme:
+        return output_root
+    if parts.scheme == "file" and parts.netloc in ("", "localhost"):
+        return unquote(parts.path)
+    raise ValueError(
+        f"run_ingestion writes to a local or mounted output root; got {output_root!r}"
+    )
 
 
 def _scan_hours(opts: IngestionOptions) -> list[str]:
@@ -621,23 +656,17 @@ def run_ingestion(
     whole output and then replaces exactly its own window's partitions — a
     re-run of the same window replaces its output, never duplicates it, and
     a failed run leaves the previous output as it was. The output root must
-    be a local or mounted path: tasks write their files directly.
+    be a local or mounted path (or a ``file:`` URI); any other scheme raises
+    ``ValueError``, because tasks write their files directly.
 
     Returns the M2 counters: invalid rows per reason (non-zero only), and
     ``packets_written``, ``batches_approx`` (exact), ``min_ts``, ``max_ts``
     as strings.
     """
+    output_root = _local_root(output_root)
     df = spark.read.parquet(input_path)
-    scanned = True
     if "ts_hour" in df.columns:  # hour-partition pruning, ± grace (S1 analog)
-        hours = set(_scan_hours(opts))
-        df = df.filter(F.col("ts_hour").isin(sorted(hours))).drop("ts_hour")
-        # a scan left with no file runs no task, and an Observation no task
-        # reported to has no value: detect that case here, from the listing
-        scanned = any(
-            m is not None and m.group(1) in hours
-            for m in (re.search(r"/ts_hour=([^/]+)/", f) for f in df.inputFiles())
-        )
+        df = df.filter(F.col("ts_hour").isin(_scan_hours(opts))).drop("ts_hour")
     obs = Observation("invalid")
     valid, counters = split_valid(df, obs)
     packets = _packets(valid, opts)
@@ -648,11 +677,7 @@ def run_ingestion(
     staging = os.path.join(output_root, "_staging", uuid.uuid4().hex)
     os.makedirs(staging)
     try:
-        results = (
-            _writer_pass(spark, packets, opts, schemas, output_root, staging)
-            if scanned
-            else []
-        )
+        results = _writer_pass(spark, packets, opts, schemas, output_root, staging)
         written = {f for r in results for f in r["files"]}
         if not written:
             written = _write_empty_legs(staging, legs, schemas)
@@ -680,17 +705,13 @@ def run_ingestion(
             )
 
     # M2 counters (Beam Metrics analog, model/DataShare.java:46-55). The
-    # Observation is part of the final plan only when packets reached the
-    # writer: once a stage runs empty, AQE swaps the plan below it for an
-    # empty relation and the observed scan with it. An empty window
-    # therefore counts its invalid rows with one extra aggregation, and a
-    # window with no input file counts nothing.
-    if not scanned:
-        invalid = {}
-    elif results:
-        invalid = obs.get
-    else:
-        invalid = {r["invalid_reason"]: r["n"] for r in counters.collect()}
+    # Observation has a value only when packets reached the writer: a scan
+    # with no file runs no task, and once a stage runs empty AQE swaps the
+    # plan below it, observed scan included, for an empty relation. A window
+    # with no packets counts its invalid rows with one small aggregation.
+    invalid = obs.get if results else {
+        r["invalid_reason"]: r["n"] for r in counters.collect()
+    }
     stats: dict[str, int | str] = {r: n for r, n in invalid.items() if n}
     stats.update(
         packets_written=str(sum(r["packets"] for r in results)),

@@ -1,12 +1,14 @@
-"""run_ingestion's single writer pass: its legs against the DataFrame
-definitions they replace (build_headers, build_signatures, sign_headers'
-verifier, write_batch_containers), empty windows that leave other windows
-alone, a failed re-run that leaves the previous output as it was, and the
-number of Spark jobs one window costs."""
+"""run_ingestion's single writer pass: its legs and counters against the
+DataFrame definitions they replace (build_headers, build_signatures,
+sign_headers' verifier, write_batch_containers, split_valid), empty windows
+that leave other windows alone, a re-run failing in the writer or in the
+commit that leaves the previous output as it was, the local output root,
+and the number of Spark jobs one window costs."""
 
 from __future__ import annotations
 
 import base64
+import errno
 import glob
 import hashlib
 import json
@@ -28,6 +30,7 @@ from exposure_notifications_private_analytics_ingestion_spark.functions.signing 
 from exposure_notifications_private_analytics_ingestion_spark.model.schema import (
     TURNS_WITH_PAYLOAD_SCHEMA,
 )
+from exposure_notifications_private_analytics_ingestion_spark.model.validate import split_valid
 from exposure_notifications_private_analytics_ingestion_spark.plans import ingestion
 from exposure_notifications_private_analytics_ingestion_spark.plans.ingestion import (
     IngestionOptions,
@@ -83,9 +86,9 @@ def written(request, spark, tmp_path_factory):
         inp = _prio_corpus(spark, str(tmp / "docs"))
         pem = generate_signing_key_pem("writer-pass-test")
     else:
-        inp = write_turns_table(
-            spark, generate_turns(n_convs=15, seed=8, hours=3), str(tmp / "turns")
-        )
+        turns = generate_turns(n_convs=15, seed=8, hours=3)
+        turns.loc[::9, "text"] = None  # missing_payload rows
+        inp = write_turns_table(spark, turns, str(tmp / "turns"))
         pem = None
     opts = IngestionOptions(
         window_start_s=JAN,
@@ -95,11 +98,11 @@ def written(request, spark, tmp_path_factory):
         signing_key_pem=pem,
     )
     stats = run_ingestion(spark, inp, str(tmp / "out"), opts)
-    return spark, str(tmp / "out"), opts, stats
+    return spark, str(tmp / "out"), opts, stats, inp
 
 
 def test_headers_leg_equals_build_headers(written):
-    spark, out, opts, stats = written
+    spark, out, opts, stats, _ = written
     packets = spark.read.parquet(f"{out}/packets")
     ref = build_headers(packets, opts)
     got = _rows(spark, f"{out}/batch_headers")
@@ -114,8 +117,21 @@ def test_headers_leg_equals_build_headers(written):
     }
 
 
+def test_invalid_counters_equal_split_valid(written):
+    """The counters run_ingestion returns (an Observation on the scan) are
+    split_valid's counters over the same hour-pruned input."""
+    spark, _, opts, stats, inp = written
+    df = spark.read.parquet(inp)
+    if "ts_hour" in df.columns:
+        df = df.filter(F.col("ts_hour").isin(ingestion._scan_hours(opts))).drop("ts_hour")
+    ref = {r["invalid_reason"]: r["n"] for r in split_valid(df)[1].collect()}
+    assert ref and all(n > 0 for n in ref.values())
+    totals = ("packets_written", "batches_approx", "min_ts", "max_ts")
+    assert {k: v for k, v in stats.items() if k not in totals} == ref
+
+
 def test_signatures_leg(written):
-    spark, out, opts, _ = written
+    spark, out, opts, _, _ = written
     headers = spark.read.parquet(f"{out}/batch_headers")
     got = _rows(spark, f"{out}/signatures")
     ref = build_signatures(headers)
@@ -141,7 +157,7 @@ def _types(df) -> dict:
 
 
 def test_containers_equal_write_batch_containers(written, tmp_path):
-    spark, out, opts, _ = written
+    spark, out, opts, _, _ = written
     manifest = spark.read.parquet(f"{out}/avro_manifest").collect()
     ref = write_batch_containers(
         spark.read.parquet(f"{out}/packets"), str(tmp_path / "ref"), opts.window_start_s
@@ -231,7 +247,16 @@ def test_empty_window_keeps_earlier_windows(spark, tmp_path, partition_by_hour):
         assert os.listdir(f"{out}/{leg}/window_start_s={empty.window_start_s}")
 
 
-def test_failed_rerun_leaves_previous_output(spark, tmp_path, monkeypatch):
+def _leftovers(out: str) -> list[str]:
+    return [
+        os.path.join(base, n)
+        for base, dirs, files in os.walk(out)
+        for n in dirs + files
+        if n.endswith(".tmp") or n == "_staging"
+    ]
+
+
+def _rerun_setup(spark, tmp_path):
     inp = write_turns_table(
         spark, generate_turns(n_convs=12, seed=6, hours=2), str(tmp_path / "turns")
     )
@@ -240,7 +265,11 @@ def test_failed_rerun_leaves_previous_output(spark, tmp_path, monkeypatch):
         window_start_s=JAN, duration_s=2 * 3600, batch_size=8, emit_avro_containers=True
     )
     run_ingestion(spark, inp, out, opts)
-    before = _snapshot(spark, out)
+    return inp, out, opts, _snapshot(spark, out)
+
+
+def test_failed_rerun_leaves_previous_output(spark, tmp_path, monkeypatch):
+    inp, out, opts, before = _rerun_setup(spark, tmp_path)
     last = max(r["batch_id"] for r in before["batch_headers"])
     real = ingestion.encode_container
 
@@ -253,13 +282,43 @@ def test_failed_rerun_leaves_previous_output(spark, tmp_path, monkeypatch):
     with pytest.raises(Exception, match="injected writer failure"):
         run_ingestion(spark, inp, out, opts)
     assert _snapshot(spark, out) == before
-    leftovers = [
-        os.path.join(base, n)
-        for base, dirs, files in os.walk(out)
-        for n in dirs + files
-        if n.endswith(".tmp") or n == "_staging"
-    ]
-    assert leftovers == []
+    assert _leftovers(out) == []
+
+
+def test_failed_commit_restores_previous_output(spark, tmp_path, monkeypatch):
+    """A rename that fails mid-commit — here the first container subtree,
+    after all four legs were swapped — undoes the renames before it."""
+    inp, out, opts, before = _rerun_setup(spark, tmp_path)
+    real, failed = os.rename, []
+
+    def rename(src, dst):
+        if not failed and dst.startswith(os.path.join(out, "avro", "")):
+            failed.append(dst)
+            raise OSError(errno.EXDEV, "injected cross-device rename", dst)
+        return real(src, dst)
+
+    monkeypatch.setattr(ingestion.os, "rename", rename)
+    with pytest.raises(OSError, match="injected cross-device rename"):
+        run_ingestion(spark, inp, out, opts)
+    monkeypatch.undo()
+    assert _snapshot(spark, out) == before
+    assert _leftovers(out) == []
+
+
+def test_output_root_must_be_local(spark, tmp_path):
+    """Tasks write the legs straight into the root: a ``file:`` URI is a
+    local path, and a remote scheme fails before anything runs."""
+    inp = write_turns_table(
+        spark, generate_turns(n_convs=4, seed=3, hours=1), str(tmp_path / "turns")
+    )
+    opts = IngestionOptions(window_start_s=JAN, duration_s=3600, batch_size=8)
+    for root in ("s3a://bucket/out", "hdfs://namenode/out", "file://otherhost/out"):
+        with pytest.raises(ValueError, match="local or mounted output root"):
+            run_ingestion(spark, inp, root, opts)
+    assert not os.path.exists("s3a:") and not os.path.exists("hdfs:")
+    stats = run_ingestion(spark, inp, f"file://{tmp_path}/out", opts)
+    packets = spark.read.parquet(f"{tmp_path}/out/packets")
+    assert int(stats["packets_written"]) == packets.count() > 0
 
 
 def test_one_window_runs_at_most_five_spark_jobs(spark, tmp_path):
