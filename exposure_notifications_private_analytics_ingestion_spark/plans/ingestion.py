@@ -24,7 +24,9 @@ each (batch, destination) group in turn — packet rows, header with
 reference's ``BatchWriterFn.java:104-239``. Tasks stream every leg into a
 per-run staging tree, and the driver swaps it into place only after the
 action succeeded. ``build_headers`` / ``build_signatures`` /
-``sign_headers`` remain the DataFrame definitions of the same values.
+``sign_headers`` remain the DataFrame definitions of the same values. The
+streaming epoch sink (``streaming/sink.py``) runs the same writer pass and
+commit once per epoch, with its own header builder.
 """
 
 from __future__ import annotations
@@ -36,6 +38,7 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 from urllib.parse import unquote, urlsplit
@@ -305,11 +308,13 @@ def build_signatures(
 
 
 # the output legs the writer pass stages, in commit order; each is parquet
-# under {output_root}/{leg}/window_start_s=W/destination=D
+# under {output_root}/{leg}/{partition}/, split by destination=D unless its
+# files carry the destination column
 LEGS = ("packets", "batch_headers", "signatures", "avro_manifest")
 # columns no reader prunes on — hashes, signatures, payload bytes, file
-# paths — get no min/max statistics; they and the per-file unique uuid get
-# no dictionary (each value would be stored twice, once in the dictionary)
+# paths — get no min/max statistics; they, the per-file unique uuid and the
+# stream's millisecond event time get no dictionary (each value would be
+# stored twice, once in the dictionary)
 _OPAQUE = {
     "encrypted_payload",
     "device_nonce",
@@ -318,7 +323,7 @@ _OPAQUE = {
     "file_sha256",
     "path",
 }
-_UNIQUE = _OPAQUE | {"uuid"}
+_UNIQUE = _OPAQUE | {"uuid", "ts_ms"}
 _ROW_GROUP_BYTES = 64 << 20
 
 
@@ -406,59 +411,101 @@ def _leg_schemas(packets: DataFrame) -> dict[str, pa.Schema]:
     }
 
 
-def _writer_pass(
-    spark: SparkSession,
-    packets: DataFrame,
-    opts: IngestionOptions,
-    schemas: dict[str, pa.Schema],
-    output_root: str,
-    staging: str,
-) -> list:
-    """The window's one action: every output leg written executor-side.
+def _window_header_row(spark: SparkSession, opts: IngestionOptions, has_prio: bool):
+    """The batch job's header builder for ``_writer_pass``: the
+    ``build_headers`` row of one (batch, destination) group."""
+    window_start, window_end = opts.window_start_s, opts.window_start_s + opts.duration_s
+    tz = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+    ts_path = datetime.fromtimestamp(window_start, tz=tz).strftime("%Y/%m/%d/%H/%M")
 
-    Packets are repartitioned by ``batch_id`` and sorted by
-    ``(batch_id, destination, uuid)``; a ``mapInArrow`` task walks its
-    (batch, destination) groups in turn and, per group, appends the packet
-    rows, the header (with ``packet_file_digest``), its signature and — with
-    containers on — the ``.batch.avro`` file and its manifest row. All of it
-    lands in ``staging`` at the layout of the final tree. Each task yields
-    one row: the files it wrote and its packet/batch/ts counts."""
-    ts_type = packets.schema["ts"].dataType
+    def header_row(batch_id: str, dest: str, group: pa.Table, digest: str) -> dict:
+        name = group.column("conv_id")[0].as_py()
+        prio = (
+            {c: group.column(c)[0].as_py() for c in PLAIN_PRIO_HEADER}
+            if has_prio
+            else PLAIN_PRIO_HEADER
+        )
+        return {
+            "batch_id": batch_id,
+            "name": name,
+            "batch_start_time": window_start,
+            "batch_end_time": window_end,
+            "number_of_servers": NUMBER_OF_SERVERS,
+            **prio,
+            "packet_file_digest": digest,
+            "path": f"{dest}/{name}/{ts_path}/{batch_id}",
+            "n_packets": group.num_rows,
+        }
+
+    return header_row
+
+
+def _by_batch(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned by ``batch_id``. The EXPLICIT partition count
+    pins the writer's parallelism: AQE coalesces a plain repartition(col) to
+    advisory-sized partitions, which caps the pass well below the core count
+    on large windows."""
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n_part, "batch_id")
+
+
+def _writer_pass(
+    packets: DataFrame,
+    staging: str,
+    schemas: dict[str, pa.Schema],
+    header_row: Callable[[str, str, pa.Table, str], dict],
+    ts_col: str,
+    signing: tuple[bytes | None, str] | None = None,
+    containers: tuple[str, str] | None = None,
+) -> list:
+    """One action that writes every output leg executor-side.
+
+    ``packets`` must hold each batch in one partition; a batch split over
+    tasks comes back in several results' ``batch_ids``, each task having
+    written a partial header for it. Each task sorts its
+    rows by ``(batch_id, destination, uuid)`` and walks its
+    (batch, destination) groups in turn. Per group it appends the packet
+    rows and the header ``header_row(batch_id, destination, group, digest)``
+    around ``packet_file_digest``; with ``signing=(pem, key_id)`` the
+    header's signature; with ``containers=(output_root, ts_path)`` the
+    ``.batch.avro`` file and its manifest row. All of it lands in ``staging``
+    at the layout of the final tree: a leg whose file schema has a
+    ``destination`` column gets one file per task, any other leg one per
+    task under each ``destination=D``. Each task yields one row: the files
+    it wrote, its packet count, batch ids and conversations, and the min and
+    max of ``ts_col``."""
+    ts_type = packets.schema[ts_col].dataType
     result = T.StructType(
         [
             T.StructField("files", T.ArrayType(T.StringType())),
             T.StructField("packets", T.LongType()),
-            T.StructField("batches", T.LongType()),
+            T.StructField("batch_ids", T.ArrayType(T.StringType())),
+            T.StructField("convs", T.ArrayType(T.StringType())),
             T.StructField("min_ts", ts_type),
             T.StructField("max_ts", ts_type),
         ]
     )
     result_arrow = to_arrow_schema(result)
-    has_prio = "bins" in packets.columns
-    window_start, window_end = opts.window_start_s, opts.window_start_s + opts.duration_s
-    tz = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
-    header_ts_path = datetime.fromtimestamp(window_start, tz=tz).strftime("%Y/%m/%d/%H/%M")
-    avro_ts_path = utc_ts_path(window_start)
-    emit_avro = opts.emit_avro_containers
-    pem = opts.signing_key_pem
-    key_id = KEYED_DIGEST_KEY_ID if pem is None else opts.signing_key_id
     # bound here, so the shipped closure carries this exact function
     encode = encode_container
 
     def write(batches):
         tc = TaskContext.get()
         tag = f"part-{tc.partitionId():05d}-{tc.taskAttemptId()}"
-        sign = digest_signer(pem)
-        parts: dict[tuple[str, str], _PartFile] = {}
+        sign = digest_signer(signing[0]) if signing else None
+        parts: dict[tuple[str, str | None], _PartFile] = {}
 
         def part(leg: str, dest: str) -> _PartFile:
-            if (leg, dest) not in parts:
-                d = os.path.join(staging, leg, f"destination={dest}")
+            key = (leg, None if "destination" in schemas[leg].names else dest)
+            if key not in parts:
+                d = os.path.join(staging, leg)
+                if key[1] is not None:
+                    d = os.path.join(d, f"destination={dest}")
                 _mkdirs_in(staging, d)
-                parts[(leg, dest)] = _PartFile(os.path.join(d, f"{tag}.parquet"), schemas[leg])
-            return parts[(leg, dest)]
+                parts[key] = _PartFile(os.path.join(d, f"{tag}.parquet"), schemas[leg])
+            return parts[key]
 
-        files, n_packets, batch_ids, lo, hi = [], 0, set(), None, None
+        files, n_packets, batch_ids, convs, lo, hi = [], 0, set(), set(), None, None
         for (batch_id, dest), group in group_runs(batches):
             part("packets", dest).add_table(group)
             name = group.column("conv_id")[0].as_py()
@@ -466,35 +513,20 @@ def _writer_pass(
                 group.column("uuid").to_pylist(),
                 group.column("encrypted_payload").to_pylist(),
             )
-            prio = (
-                {c: group.column(c)[0].as_py() for c in PLAIN_PRIO_HEADER}
-                if has_prio
-                else PLAIN_PRIO_HEADER
-            )
-            part("batch_headers", dest).add_row(
-                {
-                    "batch_id": batch_id,
-                    "name": name,
-                    "batch_start_time": window_start,
-                    "batch_end_time": window_end,
-                    "number_of_servers": NUMBER_OF_SERVERS,
-                    **prio,
-                    "packet_file_digest": digest,
-                    "path": f"{dest}/{name}/{header_ts_path}/{batch_id}",
-                    "n_packets": group.num_rows,
-                }
-            )
-            part("signatures", dest).add_row(
-                {
-                    "batch_id": batch_id,
-                    "batch_header_signature": sign(digest),
-                    "key_identifier": key_id,
-                }
-            )
-            if emit_avro:
+            part("batch_headers", dest).add_row(header_row(batch_id, dest, group, digest))
+            if sign is not None:
+                part("signatures", dest).add_row(
+                    {
+                        "batch_id": batch_id,
+                        "batch_header_signature": sign(digest),
+                        "key_identifier": signing[1],
+                    }
+                )
+            if containers is not None:
+                output_root, ts_path = containers
                 blob = encode(group, batch_id, dest)
                 rel = os.path.join(
-                    container_dir("avro", dest, str(name), avro_ts_path),
+                    container_dir("avro", dest, str(name), ts_path),
                     f"{batch_id}.batch.avro",
                 )
                 staged = os.path.join(staging, rel)
@@ -511,7 +543,8 @@ def _writer_pass(
                 )
             n_packets += group.num_rows
             batch_ids.add(batch_id)
-            mm = pc.min_max(group.column("ts"))
+            convs.add(name)
+            mm = pc.min_max(group.column(ts_col))
             lo = mm["min"].as_py() if lo is None else min(lo, mm["min"].as_py())
             hi = mm["max"].as_py() if hi is None else max(hi, mm["max"].as_py())
         for p in parts.values():
@@ -523,7 +556,8 @@ def _writer_pass(
                     {
                         "files": files,
                         "packets": n_packets,
-                        "batches": len(batch_ids),
+                        "batch_ids": sorted(batch_ids),
+                        "convs": sorted(convs),
                         "min_ts": lo,
                         "max_ts": hi,
                     }
@@ -531,16 +565,30 @@ def _writer_pass(
                 schema=result_arrow,
             )
 
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # the EXPLICIT partition count pins the writer's parallelism: AQE
-    # coalesces a plain repartition(col) to advisory-sized partitions, which
-    # caps the pass well below the core count on large windows
     return (
-        packets.repartition(n_part, "batch_id")
-        .sortWithinPartitions("batch_id", "destination", "uuid")
+        packets.sortWithinPartitions("batch_id", "destination", "uuid")
         .mapInArrow(write, schema=result)
         .collect()
     )
+
+
+@contextlib.contextmanager
+def _staging_tree(output_root: str):
+    """A private staging directory under ``{output_root}/_staging`` (readers
+    of the legs never list it), removed when the block ends. Spark does not
+    wait for the tasks it kills when an action fails: the tree is moved away
+    first, so that one still running cannot write into it (see
+    ``_mkdirs_in``), then deleted."""
+    staging = os.path.join(output_root, "_staging", uuid.uuid4().hex)
+    os.makedirs(staging)
+    try:
+        yield staging
+    finally:
+        retired = f"{staging}.retired"
+        os.rename(staging, retired)
+        shutil.rmtree(retired, ignore_errors=True)
+        with contextlib.suppress(OSError):
+            os.rmdir(os.path.dirname(staging))
 
 
 def _write_empty_legs(staging: str, legs: tuple[str, ...], schemas: dict) -> set[str]:
@@ -558,33 +606,46 @@ def _write_empty_legs(staging: str, legs: tuple[str, ...], schemas: dict) -> set
     return paths
 
 
-def _commit(
-    staging: str, output_root: str, opts: IngestionOptions, written: set[str]
-) -> None:
-    """Swap the staged window into the output tree, after the action
-    succeeded. Files of failed or speculative task attempts — anything the
-    successful attempts did not report — are dropped first. Each leg's
-    ``window_start_s=W`` directory and this window's container subtrees
-    ``avro/*/*/{YYYY/MM/dd/HH/mm}`` are replaced by the staged ones; other
-    windows are not touched. The previous output is moved into the staging
-    tree rather than deleted, so if any rename fails, the renames already
-    done are undone and the window reads back as before."""
+def _listed_subtrees(output_root: str, partition: str) -> set[str]:
+    """The container subtrees ``avro/{dest}/{name}/{ts}``, relative to the
+    root, that the partition's committed ``avro_manifest`` leg lists."""
+    subtrees = set()
+    for f in glob.glob(os.path.join(output_root, "avro_manifest", partition, "*", "*.parquet")):
+        for path in pq.read_table(f, columns=["path"]).column("path").to_pylist():
+            rel = os.path.relpath(os.path.dirname(path), output_root)
+            # a manifest written before the root was moved names paths
+            # outside it; nothing outside the root is replaced
+            if rel.split(os.sep)[0] == "avro":
+                subtrees.add(rel)
+    return subtrees
+
+
+def _commit(staging: str, output_root: str, partition: str, written: set[str]) -> None:
+    """Swap the staged output into the tree, after the action succeeded.
+    Files of failed or speculative task attempts — anything the successful
+    attempts did not report — are dropped first. Each staged leg replaces
+    that leg's ``partition`` directory (``window_start_s=W`` or
+    ``epoch=E``); other partitions are not touched. A staged
+    ``avro_manifest`` leg also replaces the container subtrees it fills and
+    those the partition's previous manifest lists, so the commit reads one
+    partition's manifest instead of listing the container tree. The
+    previous output is moved into the staging tree rather than deleted, so
+    if any rename fails, the renames already done are undone and the
+    partition reads back as before."""
     for base, _, names in os.walk(staging):
         for n in names:
             if os.path.join(base, n) not in written:
                 os.remove(os.path.join(base, n))
-    ws = f"window_start_s={opts.window_start_s}"
     swaps = [  # (final, staged); a missing staged path only removes final
-        (os.path.join(output_root, leg, ws), os.path.join(staging, leg))
+        (os.path.join(output_root, leg, partition), os.path.join(staging, leg))
         for leg in LEGS
         if os.path.isdir(os.path.join(staging, leg))
     ]
-    if opts.emit_avro_containers:
-        ts_path = utc_ts_path(opts.window_start_s)
-        subtrees = {
-            os.path.relpath(p, root)
-            for root in (output_root, staging)
-            for p in glob.glob(os.path.join(root, "avro", "*", "*", ts_path))
+    if os.path.isdir(os.path.join(staging, "avro_manifest")):
+        subtrees = _listed_subtrees(output_root, partition) | {
+            os.path.relpath(os.path.dirname(f), staging)
+            for f in written
+            if f.endswith(".batch.avro")
         }
         swaps += [
             (os.path.join(output_root, rel), os.path.join(staging, rel))
@@ -673,24 +734,22 @@ def run_ingestion(
 
     schemas = _leg_schemas(packets)
     legs = LEGS if opts.emit_avro_containers else LEGS[:3]
-    # the run's private staging tree; readers of the legs never list it
-    staging = os.path.join(output_root, "_staging", uuid.uuid4().hex)
-    os.makedirs(staging)
-    try:
-        results = _writer_pass(spark, packets, opts, schemas, output_root, staging)
+    pem = opts.signing_key_pem
+    signing = (pem, KEYED_DIGEST_KEY_ID if pem is None else opts.signing_key_id)
+    containers = (
+        (output_root, utc_ts_path(opts.window_start_s))
+        if opts.emit_avro_containers
+        else None
+    )
+    header_row = _window_header_row(spark, opts, "bins" in packets.columns)
+    with _staging_tree(output_root) as staging:
+        results = _writer_pass(
+            _by_batch(packets), staging, schemas, header_row, "ts", signing, containers
+        )
         written = {f for r in results for f in r["files"]}
         if not written:
             written = _write_empty_legs(staging, legs, schemas)
-        _commit(staging, output_root, opts, written)
-    finally:
-        # Spark does not wait for the tasks it kills when an action fails:
-        # move the tree away first, so that one still running cannot write
-        # into it (see _mkdirs_in), then delete it
-        retired = f"{staging}.retired"
-        os.rename(staging, retired)
-        shutil.rmtree(retired, ignore_errors=True)
-        with contextlib.suppress(OSError):
-            os.rmdir(os.path.dirname(staging))
+        _commit(staging, output_root, f"window_start_s={opts.window_start_s}", written)
     if opts.signing_key_pem is not None:
         # publish the verification material (key id + public key DER) —
         # the sandbox analog of the KMS key resource name the reference's
@@ -715,7 +774,7 @@ def run_ingestion(
     stats: dict[str, int | str] = {r: n for r, n in invalid.items() if n}
     stats.update(
         packets_written=str(sum(r["packets"] for r in results)),
-        batches_approx=str(sum(r["batches"] for r in results)),
+        batches_approx=str(len({b for r in results for b in r["batch_ids"]})),
         min_ts=str(min((r["min_ts"] for r in results), default=None)),
         max_ts=str(max((r["max_ts"] for r in results), default=None)),
     )

@@ -85,7 +85,6 @@ def get_spark(
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     )
     for k, v in iceberg_confs().items():
         b = b.config(k, v)

@@ -72,7 +72,7 @@ def start_heavy_hitters_stream(
         # NOTE: no isEmpty() pre-check — every action on a foreachBatch frame
         # re-executes the stateful microbatch plan, so an emptiness probe
         # would run the windowed sketch agg once just to answer a boolean
-        # (~2× epoch cost, same trap streaming/sink.py documents). Persist
+        # (~2× epoch cost). Persist
         # the (tiny: ≤ closed windows) emitted rows and count the cache.
         cached = batch_df.persist()
         try:

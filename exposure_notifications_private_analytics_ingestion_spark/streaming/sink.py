@@ -1,34 +1,30 @@
-"""Exactly-once dual-destination sink for the streaming CEP core.
+"""Exactly-once epoch sink for the streaming CEP core.
 
-The reference achieves retry-idempotence with deterministic file UUIDs so a
-rerun overwrites the same destination (``BatchWriterFn.java:135-150``). Spark
-foreachBatch gives a stronger primitive: the epoch id is stable across
-micro-batch retries, so writing each epoch's output under an epoch-keyed
-partition with overwrite makes the whole sink exactly-once — a retried epoch
-replaces exactly its own files.
+Each epoch's closed batches go through the batch job's writer pass
+(``plans/ingestion.py::_writer_pass``): ONE Spark action, in which each task
+writes the packet rows and the header — with ``packet_file_digest``, the one
+Python definition both jobs use — of each (batch, destination) group into a
+staging tree, which the driver then swaps into the legs' ``epoch=E``
+partitions (``_commit``). foreachBatch hands a retried epoch the same id, so
+a retry replaces exactly its own partitions and the sink is exactly-once, as
+the reference's deterministic file UUIDs make its batch job
+(``BatchWriterFn.java:135-150``).
 
-On Iceberg this is one ``MERGE INTO``/``overwriteByFilter`` transaction; on
-the parquet stand-in it's dynamic partition overwrite on ``epoch=<id>``.
+Each epoch that closes rows writes:
+- ``packets/epoch=E/destination=D/`` — one row per closed turn and
+  destination (pha + facilitator)
+- ``batch_headers/epoch=E/`` — one row per (batch, destination), with
+  ``destination`` as a column
+- ``lineage/epoch-E.json`` — the epoch's exact row, batch and conversation
+  counts and ts bounds, from the writer's task results (the north_rule's
+  per-partition lineage record)
 
-Each epoch writes:
-- ``packets/`` — ×2 fan-out rows (pha + facilitator)
-- ``batch_headers/`` — per-(batch, destination) manifest with sha256 digest
-- ``lineage/`` — per-epoch provenance: epoch id, batch ids, row counts,
-  ts bounds (the north_rule's per-partition lineage record)
-
-Plan shape (the scaling-critical part): ONE shuffle per epoch — the closed
-TURN rows are repartitioned by batch_id with an EXPLICIT partition count
-(AQE would otherwise coalesce the repartition-by-column to a handful of
-partitions and cap the downstream parquet/digest parallelism — measured as a
-flat ~25 s sink at every core count) and cached PRE-explode. The ×2
-destination fan-out is a narrow Generate on top of that cache, so the
-parquet write inherits the batch_id partitioning; the header digest
-aggregates the cached turn rows exchange-free and is computed ONCE per batch
-— both destinations of a transcript-mode packet carry the same
-(uuid, payload) bytes by construction (``_split_packets_streamed``), so the
-per-destination digests are identical and the destination column is fanned
-out AFTER the aggregation. Relative to digesting the exploded packets this
-halves the cache bytes, the digest input, and the aggregate group count.
+No shuffle of its own: the writer needs each batch in one task, and the
+assembler emits a closed batch from the state group holding its
+conversation, so each batch already sits in one partition of the stateful
+operator's output; the pass only sorts within partitions. The driver checks
+that no batch id came back from two tasks. A frame not clustered that way —
+a caller's own — is written once more, repartitioned by ``batch_id``.
 """
 
 from __future__ import annotations
@@ -37,17 +33,43 @@ import json
 import os
 import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DESTINATIONS = ("pha", "facilitator")
+from ..operators.packets import DESTINATIONS
+from ..plans.ingestion import (
+    _by_batch,
+    _commit,
+    _data_schema,
+    _local_root,
+    _staging_tree,
+    _writer_pass,
+)
+
+# the header leg's file schema; its files carry ``destination`` as a column
+EPOCH_HEADERS_SCHEMA = pa.schema(
+    [
+        ("batch_id", pa.string()),
+        ("destination", pa.string()),
+        ("name", pa.string()),
+        ("batch_start_time", pa.int64()),
+        ("n_packets", pa.int64()),
+        ("min_ts_ms", pa.int64()),
+        ("max_ts_ms", pa.int64()),
+        ("packet_file_digest", pa.string()),
+    ]
+)
 
 
-def _closed_turns(batch_df: DataFrame) -> DataFrame:
-    """One row per closed turn, with the packet uuid and payload bytes —
-    the pre-explode form both the packet write and the header digest share."""
+def _packets(batch_df: DataFrame) -> DataFrame:
+    """One packet row per closed turn and destination. Narrow, so it keeps
+    the partitioning of the assembler's output."""
+    dest = F.explode(F.array(*[F.lit(d) for d in DESTINATIONS])).alias("destination")
     return batch_df.select(
         "batch_id",
+        dest,
         F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string")).alias("uuid"),
         F.encode("text", "UTF-8").alias("encrypted_payload"),
         "conv_id",
@@ -59,134 +81,62 @@ def _closed_turns(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def _split_packets_streamed(closed: DataFrame) -> DataFrame:
-    """X1 fan-out over closed turn rows: narrow Generate, preserves the
-    batch_id partitioning of its input."""
-    exploded = closed.select(
-        "*", F.posexplode(F.array(F.lit(0), F.lit(1))).alias("_pos", "_i")
-    )
-    dest = F.when(F.col("_pos") == 0, F.lit(DESTINATIONS[0])).otherwise(
-        F.lit(DESTINATIONS[1])
-    )
-    cols = [c for c in closed.columns if c not in ("_pos", "_i")]
-    front = ["batch_id", "uuid", "encrypted_payload"]
-    rest = [c for c in cols if c not in front]
-    return exploded.select(
-        "batch_id",
-        dest.alias("destination"),
-        "uuid",
-        "encrypted_payload",
-        *rest,
-    )
-
-
-def _headers(closed: DataFrame) -> DataFrame:
-    """Per-(batch, destination) manifest. Digest = sha256 over
-    ``uuid:hex(payload)`` sorted — computed once per batch over the TURN
-    rows (both destinations carry identical bytes in transcript mode), then
-    fanned out per destination. Exchange-free on batch_id partitioning."""
-    per_batch = (
-        closed.select(
-            "batch_id",
-            "conv_id",
-            "window_start_s",
-            "uuid",
-            F.hex("encrypted_payload").alias("ph"),
-            "ts_ms",
-        )
-        .groupBy("batch_id")
-        .agg(
-            F.first("conv_id").alias("name"),
-            F.first("window_start_s").alias("batch_start_time"),
-            F.count("*").alias("n_packets"),
-            F.min("ts_ms").alias("min_ts_ms"),
-            F.max("ts_ms").alias("max_ts_ms"),
-            F.sha2(
-                F.concat_ws(
-                    "",
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("uuid", "ph"))),
-                        lambda s: F.concat(s["uuid"], F.lit(":"), s["ph"]),
-                    ),
-                ),
-                256,
-            ).alias("packet_file_digest"),
-        )
-    )
-    dest = F.explode(
-        F.array(*[F.lit(d) for d in DESTINATIONS])
-    ).alias("destination")
-    return per_batch.select(
-        "batch_id",
-        dest,
-        "name",
-        "batch_start_time",
-        "n_packets",
-        "min_ts_ms",
-        "max_ts_ms",
-        "packet_file_digest",
-    )
+def _header_row(batch_id: str, dest: str, group: pa.Table, digest: str) -> dict:
+    ts = pc.min_max(group.column("ts_ms"))
+    return {
+        "batch_id": batch_id,
+        "destination": dest,
+        "name": group.column("conv_id")[0].as_py(),
+        "batch_start_time": group.column("window_start_s")[0].as_py(),
+        "n_packets": group.num_rows,
+        "min_ts_ms": ts["min"].as_py(),
+        "max_ts_ms": ts["max"].as_py(),
+        "packet_file_digest": digest,
+    }
 
 
 def make_epoch_sink(output_root: str):
-    """foreachBatch callable: idempotent epoch-partitioned write + lineage."""
+    """foreachBatch callable: one writer pass per epoch, committed into the
+    legs' ``epoch=E`` partitions, then the epoch's lineage record. The
+    output root must be a local or mounted path (or a ``file:`` URI)."""
+    root = _local_root(output_root)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # NOTE: no isEmpty() pre-check — in foreachBatch EVERY action on
-        # batch_df re-executes the stateful microbatch plan, so an emptiness
-        # probe would run the whole assembler once just to answer a boolean
-        # (measured: ~2× epoch cost). Persist first, count the cache instead.
-        # The EXPLICIT partition count pins the shuffle width (AQE coalesces
-        # a repartition-by-column, capping downstream parallelism).
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        closed = (
-            _closed_turns(batch_df)
-            .repartition(n_part, "batch_id")
-            .persist()
-        )
-        if closed.count() == 0:
-            closed.unpersist()
-            return
-        # exactly-once via DIRECT epoch-directory overwrite: the write targets
-        # .../packets/epoch=<id> itself, so a retried epoch replaces exactly
-        # its own subtree with the plain (non-dynamic) committer — no
-        # staging-and-move pass over the whole table, no driver-side serial
-        # file shuffling across epochs. Readers see the identical hive layout
-        # (epoch=<id>/destination=<d>) via partition discovery.
-        (
-            _split_packets_streamed(closed)
-            .write.mode("overwrite")
-            .partitionBy("destination")
-            .parquet(f"{output_root}/packets/epoch={epoch_id}")
-        )
-        headers = _headers(closed)
-        headers.write.mode("overwrite").parquet(
-            f"{output_root}/batch_headers/epoch={epoch_id}"
-        )
-        # lineage: one JSON record per epoch (atomic rename for idempotence);
-        # turn-level rows, so each turn counts once
-        stats = closed.agg(
-            F.count("*").alias("n_rows"),
-            F.approx_count_distinct("batch_id").alias("n_batches"),
-            F.min("ts_ms").alias("min_ts_ms"),
-            F.max("ts_ms").alias("max_ts_ms"),
-            F.approx_count_distinct("conv_id").alias("n_convs"),
-        ).collect()[0]
-        os.makedirs(f"{output_root}/lineage", exist_ok=True)
+        # no emptiness probe and no persist: in foreachBatch every action
+        # re-executes the stateful plan, so the epoch is this one action
+        packets = _packets(batch_df)
+        schemas = {
+            "packets": _data_schema(packets.schema),
+            "batch_headers": EPOCH_HEADERS_SCHEMA,
+        }
+        with _staging_tree(root) as staging:
+            results = _writer_pass(packets, staging, schemas, _header_row, "ts_ms")
+            ids = [b for r in results for b in r["batch_ids"]]
+            if len(ids) != len(set(ids)):
+                # a batch split over tasks has partial headers; the first
+                # pass's files are not in the second pass's results, so
+                # _commit drops them
+                results = _writer_pass(
+                    _by_batch(packets), staging, schemas, _header_row, "ts_ms"
+                )
+            if not results:
+                return
+            written = {f for r in results for f in r["files"]}
+            _commit(staging, root, f"epoch={epoch_id}", written)
         rec = {
             "epoch": epoch_id,
-            "n_rows": stats["n_rows"],
-            "n_batches": stats["n_batches"],
-            "n_convs": stats["n_convs"],
-            "min_ts_ms": stats["min_ts_ms"],
-            "max_ts_ms": stats["max_ts_ms"],
+            # every closed turn is one packet per destination
+            "n_rows": sum(r["packets"] for r in results) // len(DESTINATIONS),
+            "n_batches": len({b for r in results for b in r["batch_ids"]}),
+            "n_convs": len({c for r in results for c in r["convs"]}),
+            "min_ts_ms": min(r["min_ts"] for r in results),
+            "max_ts_ms": max(r["max_ts"] for r in results),
             "wall_time": time.time(),
         }
-        tmp = f"{output_root}/lineage/.epoch-{epoch_id}.tmp"
+        os.makedirs(f"{root}/lineage", exist_ok=True)
+        tmp = f"{root}/lineage/.epoch-{epoch_id}.tmp"
         with open(tmp, "w") as f:
             json.dump(rec, f)
-        os.replace(tmp, f"{output_root}/lineage/epoch-{epoch_id}.json")
-        closed.unpersist()
+        os.replace(tmp, f"{root}/lineage/epoch-{epoch_id}.json")
 
     return sink
