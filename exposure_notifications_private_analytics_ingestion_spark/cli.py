@@ -64,11 +64,11 @@ def main(argv: list[str] | None = None) -> int:
     ps.add_argument("--mode", choices=["tumbling", "session"], default="tumbling")
     ps.add_argument("--session-gap", type=int, default=1800,
                     help="session-mode inactivity gap, seconds")
-    ps.add_argument("--bucket-by", type=int, default=None,
-                    help="hash-bucketed state: key the stateful assembler by "
-                         "hash(conv_id) %% N instead of raw conv_id (~5x "
-                         "throughput at many small conversations; identical "
-                         "output). Size it ~n_active_convs/200.")
+    ps.add_argument("--bucket-by", type=int, default=StreamOptions.bucket_by,
+                    help="state keys: key the stateful assembler by "
+                         "hash(conv_id) %% N (output does not depend on N; "
+                         "fixed for a checkpoint's life). Size it "
+                         "~n_active_convs/200.")
     ps.add_argument("--facts", default=None,
                     help="attestation-fact stream path (conv_id, fact_id, "
                          "fact_ts): only turns whose conversation has a fact "

@@ -11,17 +11,20 @@ second deterministic file-UUID; we collapse both into one deterministic
 hit identical destinations, which is strictly stronger
 (comment at ``IngestionPipeline.java:229-231`` concedes the reference's isn't).
 
-Spark shapes (no GroupIntoBatches built-in — SURVEY §2 G1):
-- exact chunking: ``row_number() over (partition by key order by turn_idx)``
-  then ``floor((rn-1)/batch_size)``. One shuffle + per-key sort. Matches the
-  reference's "every batch except the last is exactly batch_size" property
-  and gives a replay-stable membership.
-- scalable variant for hot keys: a per-key count (hash-agg, map-side partial)
-  joined back (AQE picks broadcast vs skew-split SMJ at runtime), then
-  stateless ``pmod(xxhash64(turn_idx), n_batches)``
-  assignment — no per-key sort, batches are *approximately* batch_size. Use
-  when a single conversation exceeds what one task should sort (the 10^12-turn
-  hot-key case); membership is still deterministic.
+Spark shapes (no GroupIntoBatches built-in — SURVEY §2 G1). Both chunkers
+take rows already deduplicated by ``operators/dedup.py``'s winner rule and
+window-filtered, so they differ only in batch membership:
+- exact chunking (``assign_batches``): ``row_number() over (partition by
+  key order by turn_idx)`` then ``floor((rn-1)/batch_size)``. A per-key sort;
+  after ``repartition(dedup key)`` it needs no exchange of its own
+  (``dedup_window_chunk``). Matches the reference's "every batch except the
+  last is exactly batch_size" property and gives a replay-stable membership.
+- scalable chunking for hot keys (``assign_batches_scalable``): a per-key
+  count (hash-agg, map-side partial) joined back (AQE picks broadcast vs
+  skew-split SMJ at runtime), then stateless ``pmod(xxhash64(turn_idx),
+  n_batches)`` assignment — no per-key sort, batches are *approximately*
+  batch_size. Use when a single conversation exceeds what one task should
+  sort (the 10^12-turn hot-key case); membership is still deterministic.
 """
 
 from __future__ import annotations
@@ -30,6 +33,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import uuid5_col
+from .dedup import dedup_turns_deterministic
+from .window_filter import window_filter
 
 
 def _batch_uuid(key_expr, window_start_s: int, ordinal_col):
@@ -71,55 +76,29 @@ def dedup_window_chunk(
     ts_col: str = "ts",
     dedup_key_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Fused D1+F1+G1: deterministic dedup, window filter, and fixed-size
-    chunking behind a SINGLE exchange.
+    """D1+F1+G1 behind ONE exchange: ``repartition(dedup_key_cols)``, then
+    ``dedup_turns_deterministic`` on ``(dedup_key_cols, order_cols)``,
+    ``window_filter`` and ``assign_batches`` on ``key_cols``.
 
-    Trick: ``repartition(dedup_key)`` gives HashPartitioning(dedup_key),
-    which satisfies the ClusteredDistribution of BOTH window specs — dedup's
-    ``partitionBy(dedup_key, turn_idx)`` and chunking's
-    ``partitionBy(key_cols)`` (partitioning on a *subset* of the clustering
-    keys still co-locates every full key; dedup_key must be a subset of
-    key_cols, which holds — chunk keys only ever EXTEND the dedup keys).
-    When the two key sets are equal (plain transcripts) the dedup sort
-    ``(key, turn_idx, row_hash)`` is a prefix-superset of the chunking sort
-    ``(key, turn_idx)``, so Catalyst inserts ONE sort total; with
-    prio-extended chunk keys a second sort appears but never a second
-    exchange. Versus the unfused pipeline's two exchanges + four sorts
-    (SortAggregate dedup is unavoidable once string payloads ride the
-    aggregation buffer).
-
-    Dedup winner = min row-hash (xxhash64 over all non-dedup-key columns):
-    deterministic under replay, same contract as dedup_turns_deterministic.
-    Dedup is keyed on ``(dedup_key_cols, order_cols)`` — NOT the extended
-    chunk key — so duplicate turns collapse to one row even when their
-    payload metadata differs (same semantics as the unfused paths).
-    """
+    HashPartitioning on the dedup keys satisfies both windows' clustering
+    (dedup's ``(dedup_key_cols, order_cols)`` and chunking's ``key_cols``,
+    which only ever extend the dedup keys), so Catalyst adds no second
+    exchange. Dedup is keyed on the dedup keys, NOT the extended chunk key:
+    duplicate turns collapse to one row even when their payload metadata
+    differs. ``plans/ingestion.py::_packets`` runs the same chain with its
+    attestation stage between the window filter and chunking."""
     key_cols = key_cols or ["conv_id"]
     dedup_key_cols = dedup_key_cols or key_cols
     order_cols = order_cols or ["turn_idx"]
-    rest = [
-        c for c in df.columns if c not in dedup_key_cols and c not in order_cols
-    ]
-    w_dedup = Window.partitionBy(*dedup_key_cols, *order_cols).orderBy(
-        F.xxhash64(*[F.col(c) for c in rest])
+    deduped = dedup_turns_deterministic(
+        df.repartition(*dedup_key_cols), dedup_key_cols + order_cols
     )
-    w_chunk = Window.partitionBy(*key_cols).orderBy(*[F.col(c) for c in order_cols])
-    ts_ms = F.expr(f"unix_micros({ts_col}) div 1000")
-    lo, hi = window_start_s * 1000, (window_start_s + duration_s) * 1000
-    out = (
-        df.repartition(*[F.col(c) for c in dedup_key_cols])
-        .withColumn("_rn_dedup", F.row_number().over(w_dedup))
-        .filter(F.col("_rn_dedup") == 1)
-        .filter(F.col(ts_col).isNotNull() & (ts_ms >= lo) & (ts_ms < hi))
-        .withColumn(
-            "batch_ordinal",
-            F.floor((F.row_number().over(w_chunk) - 1) / batch_size).cast("int"),
-        )
-        .drop("_rn_dedup")
-    )
-    key_expr = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols])
-    return out.withColumn(
-        "batch_id", _batch_uuid(key_expr, window_start_s, F.col("batch_ordinal"))
+    return assign_batches(
+        window_filter(deduped, window_start_s, duration_s, ts_col),
+        batch_size,
+        window_start_s,
+        key_cols,
+        order_cols,
     )
 
 

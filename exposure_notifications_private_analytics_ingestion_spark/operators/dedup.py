@@ -9,16 +9,19 @@ Placement matters and is preserved from the reference: dedup runs BEFORE the
 expensive validate/decode stage so duplicates never pay the pandas-UDF cost
 (SURVEY §4 "dedup placement").
 
-Scale notes: ``dropDuplicates`` is a hash-aggregate on the key — one shuffle,
-map-side partial dedup first (Catalyst plans partial_first/HashAggregate), so
-at 10^12 turns each mapper emits at most its distinct keys. For a stable
-*which-row-wins* contract under retries we also provide the deterministic
-variant (min struct per key) used wherever output parity is asserted.
+The batch winner rule is defined here, once: among rows sharing a key, the
+one whose remaining columns are smallest, compared in column order with
+NULL first (``row_number() over (partition by key order by rest)``). It is
+total up to fully identical rows, so a replay or a retry keeps the same
+bytes, and every batch path of ``plans/ingestion.py`` uses it. The window
+needs the rows clustered by the key; any partitioning on a subset of the key
+serves, so a caller that chunks by an extension of the key can exchange once
+for both.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEDUP_KEY = ["conv_id", "turn_idx"]
@@ -31,14 +34,14 @@ def dedup_turns(df: DataFrame, key: list[str] | None = None) -> DataFrame:
 
 
 def dedup_turns_deterministic(df: DataFrame, key: list[str] | None = None) -> DataFrame:
-    """Deterministic-winner dedup: per key keep the struct-min of all other
-    columns. Single hash-aggregate (same shuffle count as dropDuplicates),
-    but replay-stable — required for the per-turn parity criterion."""
+    """Deterministic-winner dedup: per key, the row whose other columns are
+    smallest in column order, NULL first (the module's winner rule)."""
     key = key or DEDUP_KEY
     rest = [c for c in df.columns if c not in key]
-    packed = df.select(*key, F.struct(*rest).alias("_row"))
+    # with no other column, rows sharing a key are identical
+    w = Window.partitionBy(*key).orderBy(*(rest or key))
     return (
-        packed.groupBy(*key)
-        .agg(F.min("_row").alias("_row"))
-        .select(*key, *[F.col(f"_row.{c}").alias(c) for c in rest])
+        df.withColumn("_rn_dedup", F.row_number().over(w))
+        .filter(F.col("_rn_dedup") == 1)
+        .drop("_rn_dedup")
     )

@@ -11,11 +11,12 @@ tests drive directly (``IngestionPipelineTest.java:50-109``): pure
 ``DataFrame → (packets, headers, counters)``, no I/O. ``run_ingestion`` wraps
 the same core with the scan and one writer pass.
 
-Plan shape at scale: the core shuffles by key for dedup and chunking
-(one exchange on the fused path); validation, window filter, r_pit and the
-packet fan-out ride that exchange, and Catalyst pushes the window predicate into the
-scan (hour-partition pruning). The invalid-row counters are an
-``Observation`` on the validated scan. ``run_ingestion`` then runs ONE action:
+Plan shape at scale: the core shuffles once by the dedup key, for dedup
+and exact chunking alike; validation, window filter, attestation, r_pit and
+the packet fan-out ride that exchange (the hot-key chunker adds its own),
+and Catalyst pushes the window predicate into the scan (hour-partition
+pruning). The invalid-row counters are an ``Observation`` on the validated
+scan. ``run_ingestion`` then runs ONE action:
 packets repartitioned by ``batch_id`` and sorted by
 ``(batch_id, destination, uuid)`` feed a ``mapInArrow`` writer that handles
 each (batch, destination) group in turn — packet rows, header with
@@ -69,11 +70,7 @@ from ..functions.signing import (
 )
 from ..model.validate import split_valid, with_rpit
 from ..operators.attestation import get_attestation
-from ..operators.batching import (
-    assign_batches,
-    assign_batches_scalable,
-    dedup_window_chunk,
-)
+from ..operators.batching import assign_batches, assign_batches_scalable
 from ..operators.dedup import dedup_turns_deterministic
 from ..operators.packets import DESTINATIONS, split_packets, turn_uuid
 from ..operators.window_filter import window_filter
@@ -119,6 +116,30 @@ def _packets(valid: DataFrame, opts: IngestionOptions) -> DataFrame:
     has_payload = "encrypted_shares" in valid.columns
     stage = get_attestation(opts.attestation)
 
+    # One chain for every option set: dedup → window → [attestation] →
+    # chunk, with the winner rule of operators/dedup.py. Attestation sits
+    # between the window filter and chunking (reference op order F1→F2→K1,
+    # IngestionPipeline.java:61-89); scalable_chunking only picks the chunker.
+    # Dedup is keyed on (key_cols, turn_idx) in ALL paths — duplicate turns
+    # collapse to one row regardless of payload differences, matching the
+    # reference's Distinct-by-path (IngestionPipeline.java:110-119).
+    dedup_keys = list(opts.key_cols)
+    if opts.scalable_chunking:
+        # hot keys: dedup exchanges on the full (key, turn_idx), so no
+        # conversation is sorted whole, and the chunker routes by hash
+        rows, chunk = valid, assign_batches_scalable
+    else:
+        # one exchange on the dedup keys serves dedup and exact chunking,
+        # whose keys extend them; a narrow stage rides it too
+        rows, chunk = valid.repartition(*dedup_keys), assign_batches
+    rows = window_filter(
+        dedup_turns_deterministic(rows, dedup_keys + ["turn_idx"]),
+        opts.window_start_s,
+        opts.duration_s,
+    )
+    if stage is not None:
+        rows = stage(rows)
+
     # K1 — the reference keys batches by the FULL stringified
     # DataShareMetadata (IngestionPipeline.java:78-88), so documents with
     # different prio_params never share a batch; mirror that by extending the
@@ -126,47 +147,12 @@ def _packets(valid: DataFrame, opts: IngestionOptions) -> DataFrame:
     # columns first (`_k_*`) because nested field names cannot serve as
     # groupBy/USING-join keys (assign_batches_scalable's count-join would
     # raise UNRESOLVED_USING_COLUMN_FOR_JOIN on 'prio_params.bins').
-    # Dedup stays keyed on (key_cols, turn_idx) in ALL paths — duplicate
-    # turns collapse to one row regardless of payload differences, matching
-    # the reference's Distinct-by-path (IngestionPipeline.java:110-119).
-    dedup_keys = list(opts.key_cols)
     chunk_keys = list(opts.key_cols)
     if has_payload:
         for f_name in ("bins", "epsilon", "hamming_weight", "prime"):
-            valid = valid.withColumn(f"_k_{f_name}", F.col(f"prio_params.{f_name}"))
+            rows = rows.withColumn(f"_k_{f_name}", F.col(f"prio_params.{f_name}"))
             chunk_keys.append(f"_k_{f_name}")
-
-    if opts.scalable_chunking:
-        # hot-key path: no per-key sort; dedup → window → hash-routed chunks
-        deduped = dedup_turns_deterministic(valid, key=dedup_keys + ["turn_idx"])
-        windowed = window_filter(deduped, opts.window_start_s, opts.duration_s)
-        if stage is not None:
-            windowed = stage(windowed)
-        batched = assign_batches_scalable(
-            windowed, opts.batch_size, opts.window_start_s, key_cols=chunk_keys
-        )
-    elif stage is not None:
-        # attestation must sit between window filter and chunking (reference
-        # op order F1→F2→K1, IngestionPipeline.java:61-89) — unfused path
-        deduped = dedup_turns_deterministic(valid, key=dedup_keys + ["turn_idx"])
-        windowed = stage(window_filter(deduped, opts.window_start_s, opts.duration_s))
-        batched = assign_batches(
-            windowed, opts.batch_size, opts.window_start_s, key_cols=chunk_keys
-        )
-    else:
-        # fused D1+F1+G1: one exchange (see dedup_window_chunk); dedup still
-        # precedes the window filter, mirroring reference op order
-        # (IngestionPipeline.java:110-120). Dedup partitions on dedup_keys,
-        # chunking on the prio-extended chunk_keys — same exchange serves
-        # both (subset-clustering rule).
-        batched = dedup_window_chunk(
-            valid,
-            opts.batch_size,
-            opts.window_start_s,
-            opts.duration_s,
-            key_cols=chunk_keys,
-            dedup_key_cols=dedup_keys,
-        )
+    batched = chunk(rows, opts.batch_size, opts.window_start_s, key_cols=chunk_keys)
     drop_helper = [c for c in batched.columns if c.startswith("_k_")]
     if drop_helper:
         batched = batched.drop(*drop_helper)

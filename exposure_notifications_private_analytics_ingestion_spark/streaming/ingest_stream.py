@@ -4,12 +4,13 @@ re-expressed as a continuous CEP pipeline.
 Reference semantics → streaming mapping (SURVEY §2/§3):
 - hourly scan window + ±grace re-scan  → event-time watermark = grace hours
   (``IngestionPipelineOptions.java:141-163``)
-- Distinct on document path            → keyed dedup state per conv_id
-  (``IngestionPipeline.java:110-119``)
+- Distinct on document path            → in-state dedup set per conv_id
+  (``IngestionPipeline.java:110-119``)    and open window
 - GroupIntoBatches + batch-id          → ``applyInPandasWithState`` keyed by
-  ``conv_id``: open-batch buffer in state, closed on size OR when the
-  watermark passes the turn's tumbling-window end (event-time timeout) —
-  late rows after a close open a NEW batch, never mutate a written one
+  ``hash(conv_id) % bucket_by``: per-conv open-batch buffers in state,
+  closed on size OR when the watermark passes the turn's tumbling-window
+  end (event-time timeout) — late rows after a close open a NEW batch,
+  never mutate a written one
 - Avro triplet write w/ deterministic  → idempotent ``foreachBatch``: every
   file UUID (``BatchWriterFn.java:140-150``)  epoch writes packets + headers
   under an epoch-keyed path with overwrite, so Spark's epoch-retry lands on
@@ -22,6 +23,14 @@ state stores, which halves state-store IO and sidesteps multi-stateful-op
 output-mode restrictions. State is watermark-bounded: when a window closes,
 its dedup set is discarded (the reference bounds work identically by only
 re-scanning ±grace hours).
+
+Dedup winner: the FIRST ARRIVAL wins. Within one micro-batch a
+conversation's rows are taken in ``(ts, turn_idx, text)`` order, so among
+duplicates in one epoch the earliest, then the smallest text, is kept; a
+duplicate arriving in a later epoch is dropped. The stream cannot apply the
+batch job's rule (smallest remaining columns, ``operators/dedup.py``)
+across epochs: the earlier row may already sit in a closed batch, whose
+packets and header digest are written and immutable.
 """
 
 from __future__ import annotations
@@ -49,14 +58,14 @@ class StreamOptions:
     mode: str = "tumbling"  # 'tumbling' | 'session' (gap-close, north_rule)
     session_gap_s: int = 1800
     max_files_per_trigger: int = 64  # source micro-batch sizing
-    # state bucketing: key the stateful operator by hash(conv_id) % bucket_by
-    # instead of raw conv_id, amortizing per-group overhead (state get/put,
-    # Arrow framing, pandas construction — measured ~1.4 ms/group-call) over
-    # ~n_convs/bucket_by conversations per state entry. None = per-conv keys
-    # (the reference-shaped layout). Output is bit-identical either way —
-    # tests assert equality — because windows, dedup, ordering, and batch ids
-    # all derive from per-conv row data, never from the grouping key.
-    bucket_by: int | None = None
+    # state keys: the stateful operator is keyed by hash(conv_id) % bucket_by,
+    # amortizing per-group overhead (state get/put, Arrow framing, pandas
+    # construction — measured ~1.4 ms/group-call) over ~n_convs/bucket_by
+    # conversations per state entry. Output does not depend on it — tests
+    # assert equality across bucket counts — because windows, dedup,
+    # ordering and batch ids all derive from per-conv row data, never from
+    # the grouping key. It is part of the checkpoint's state layout.
+    bucket_by: int = 16
     # optional attestation-fact stream (schema FACTS_SCHEMA): when set, turns
     # are inner-joined (watermarked stream-stream, time-range bound) to facts
     # for the same conv seen within facts_bound_s at-or-before the turn —
@@ -92,27 +101,6 @@ BATCH_OUT_SCHEMA = T.StructType(
     ]
 )
 
-# state: per-conversation MAP of open windows (tumbling) or open sessions
-# (session mode). Parallel arrays indexed by open window; each window carries
-# its own dedup set, buffer, and ordinal counter. Multiple windows stay open
-# simultaneously because rows arrive out-of-order ACROSS microbatches within
-# the watermark horizon — a single-open-window state re-emits duplicates and
-# reuses batch ids when an earlier window is revisited (found at 2.4M-turn
-# scale; the reference sidesteps this by re-scanning whole hours in batch).
-# A window is evicted only when the watermark passes its end, so its ordinal
-# space is never reused and late rows within grace always land in live state.
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("w_start", T.ArrayType(T.LongType()), True),
-        T.StructField("w_next_ord", T.ArrayType(T.IntegerType()), True),
-        T.StructField("w_last_ts", T.ArrayType(T.LongType()), True),  # sessions
-        T.StructField("w_seen", T.ArrayType(T.ArrayType(T.IntegerType())), True),
-        T.StructField("w_buf_idx", T.ArrayType(T.ArrayType(T.IntegerType())), True),
-        T.StructField("w_buf_text", T.ArrayType(T.ArrayType(T.StringType())), True),
-        T.StructField("w_buf_ts", T.ArrayType(T.ArrayType(T.LongType())), True),
-    ]
-)
-
 
 def _batch_id(conv_id: str, window_start_s: int, ordinal: int) -> str:
     return str(
@@ -121,10 +109,15 @@ def _batch_id(conv_id: str, window_start_s: int, ordinal: int) -> str:
 
 
 # ---------------------------------------------------------------------------
-# shared per-conversation CEP core — ONE implementation drives both state
-# layouts (per-conv keys and hash-bucketed keys), so their semantics cannot
-# diverge. All functions are pure Python over plain dicts/lists: no Spark
-# objects, picklable, unit-testable without a session.
+# per-conversation CEP core, driven by the bucketed assembler below and by
+# the batch_assembly_bucketed oracle query. All functions are pure Python
+# over plain dicts/lists: no Spark objects, picklable, unit-testable without
+# a session. Multiple windows stay open per conversation because rows
+# arrive out of order ACROSS microbatches within the watermark horizon — a
+# single-open-window state re-emits duplicates and reuses batch ids when an
+# earlier window is revisited (found at 2.4M-turn scale). A window is
+# evicted only when the watermark passes its end, so its ordinal space is
+# never reused and late rows within grace always land in live state.
 #
 # wins: window_start_s -> [next_ord, last_ts_ms, seen:set,
 #                          bidx:list, btxt:list, bts:list]
@@ -291,97 +284,21 @@ def _ts_ms_of(pdf: pd.DataFrame):
     return pdf["ts"].to_numpy(dtype="datetime64[us]").astype("int64") // 1000
 
 
-def make_assembler(opts: StreamOptions):
-    """Returns the per-conversation applyInPandasWithState function. Pure
-    (no closure over Spark objects) so it pickles cleanly to executors."""
-    batch_size = opts.batch_size
-    window_s = opts.window_s
-    flush = opts.flush_partial_on_timeout
-    session_mode = opts.mode == "session"
-    gap_ms = opts.session_gap_s * 1000
-
-    def assemble(
-        key: tuple,
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
-        wins: dict[int, list] = {}
-        if state.exists:
-            ws, nords, lasts, seens, bidxs, btxts, btss = state.get
-            for i, w in enumerate(ws):
-                wins[w] = [
-                    nords[i], lasts[i], set(seens[i]),
-                    list(bidxs[i]), list(btxts[i]), list(btss[i]),
-                ]
-
-        out = _new_out()
-
-        def save_and_arm():
-            if not wins:
-                state.remove()
-                return
-            items = sorted(wins.items())
-            state.update(
-                (
-                    [w for w, _ in items],
-                    [e[0] for _, e in items],
-                    [e[1] for _, e in items],
-                    [sorted(e[2]) for _, e in items],
-                    [e[3] for _, e in items],
-                    [e[4] for _, e in items],
-                    [e[5] for _, e in items],
-                )
-            )
-            wm = state.getCurrentWatermarkMs()
-            nxt = min(
-                _end_ms(w, e, session_mode, gap_ms, window_s)
-                for w, e in items
-            )
-            state.setTimeoutTimestamp(max(nxt, wm + 1))
-
-        if state.hasTimedOut:
-            _evict_expired(
-                out, conv_id, wins, state.getCurrentWatermarkMs(),
-                batch_size, window_s, session_mode, gap_ms, flush,
-            )
-            save_and_arm()
-            if out["idx"]:
-                yield _out_pdf(out)
-            return
-
-        for pdf in pdf_iter:
-            rows = sorted(
-                zip(_ts_ms_of(pdf).tolist(), pdf["turn_idx"].tolist(),
-                    pdf["text"].tolist())
-            )
-            _ingest_sorted(
-                out, conv_id, wins, rows,
-                batch_size, window_s, session_mode, gap_ms,
-            )
-
-        save_and_arm()
-        if out["idx"]:
-            yield _out_pdf(out)
-
-    return assemble
-
-
-# bucketed state layout: one binary blob per bucket — a pickled
-# {conv_id: wins} dict. Amortizes the per-group framework cost (state
-# get/put, Arrow framing, per-group pandas construction) over every
-# conversation in the bucket; one pickle per bucket per microbatch replaces
-# hundreds of per-conv array serializations.
+# state layout: one binary blob per bucket — a pickled {conv_id: wins}
+# dict. Amortizes the per-group framework cost (state get/put, Arrow
+# framing, per-group pandas construction) over every conversation in the
+# bucket; one pickle per bucket per microbatch replaces hundreds of per-conv
+# state rows.
 BUCKET_STATE_SCHEMA = T.StructType(
     [T.StructField("blob", T.BinaryType(), True)]
 )
 
 
 def make_bucketed_assembler(opts: StreamOptions):
-    """Returns the hash-bucket applyInPandasWithState function: state key is
-    ``hash(conv_id) % bucket_by``; the blob holds every member conversation's
-    windows. Semantics are identical to make_assembler (same core functions,
-    same per-conv row order) — only the state partitioning differs."""
+    """Returns the applyInPandasWithState function: state key is
+    ``hash(conv_id) % bucket_by``; the blob holds every member
+    conversation's windows. Pure (no closure over Spark objects) so it
+    pickles cleanly to executors."""
     import pickle
 
     batch_size = opts.batch_size
@@ -432,8 +349,8 @@ def make_bucketed_assembler(opts: StreamOptions):
         from operator import itemgetter
 
         for pdf in pdf_iter:
-            # one sort by (conv, ts, idx, text): within each conv this is the
-            # exact row order the per-conv assembler processes
+            # one sort by (conv, ts, idx, text): each conv's rows in
+            # first-arrival order (see the module docstring)
             rows = sorted(
                 zip(
                     pdf["conv_id"].tolist(),
@@ -473,6 +390,8 @@ def closed_batches_stream(
     spark: SparkSession, input_path: str, opts: StreamOptions
 ) -> DataFrame:
     """readStream → watermark → keyed CEP state → closed-batch rows."""
+    if opts.bucket_by < 1:
+        raise ValueError(f"bucket_by must be a positive int; got {opts.bucket_by!r}")
     reader = spark.readStream.schema(TURNS_SCHEMA).option(
         "maxFilesPerTrigger", str(opts.max_files_per_trigger)
     )
@@ -504,24 +423,15 @@ def closed_batches_stream(
         with_wm = turns
     else:
         with_wm = turns.withWatermark("ts", opts.watermark)
-    if opts.bucket_by:
-        # hash-bucketed state (see StreamOptions.bucket_by): the shuffle key
-        # is the bucket, so the exchange and the state store see bucket_by
-        # keys instead of one per conversation
-        keyed = with_wm.withColumn(
-            "_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(opts.bucket_by))
-        )
-        return keyed.groupBy("_bucket").applyInPandasWithState(
-            make_bucketed_assembler(opts),
-            outputStructType=BATCH_OUT_SCHEMA,
-            stateStructType=BUCKET_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    return with_wm.groupBy("conv_id").applyInPandasWithState(
-        make_assembler(opts),
+    # the shuffle key is the bucket, so the exchange and the state store see
+    # bucket_by keys instead of one per conversation
+    keyed = with_wm.withColumn(
+        "_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(opts.bucket_by))
+    )
+    return keyed.groupBy("_bucket").applyInPandasWithState(
+        make_bucketed_assembler(opts),
         outputStructType=BATCH_OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
+        stateStructType=BUCKET_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
@@ -533,8 +443,10 @@ ROCKSDB_PROVIDER = (
 
 # Options whose change across a checkpoint resume corrupts or silently
 # reinterprets existing state: bucket_by/mode change the state KEY SPACE and
-# row meaning (a per-conv state map read back as bucket state is garbage —
-# Spark cannot detect this because the state schema bytes are identical);
+# row meaning (state of one bucket count read back under another routes
+# conversations to the wrong entry — Spark cannot detect this because the
+# state schema bytes are identical; a checkpoint recorded with the old
+# per-conversation layout, bucket_by null, is refused the same way);
 # window_s/session_gap_s reinterpret persisted window-start arrays.
 _STATE_LAYOUT_FIELDS = ("bucket_by", "mode", "window_s", "session_gap_s")
 

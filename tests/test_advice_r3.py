@@ -4,6 +4,8 @@ signature_verify, and one read-back layout for empty vs non-empty windows."""
 
 from __future__ import annotations
 
+import base64
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -32,15 +34,22 @@ WIN = IngestionOptions(window_start_s=JAN, duration_s=48 * 3600, batch_size=10)
 @pytest.fixture(scope="module")
 def payload_with_prio_dup(spark):
     """Valid payload turns plus one duplicate (conv_id, turn_idx) row whose
-    prio_params differ — the case where dedup-by-chunk-key and
-    dedup-by-(conv_id, turn_idx) diverge."""
+    prio_params and encrypted_shares payloads differ — the case where
+    dedup-by-chunk-key and dedup-by-(conv_id, turn_idx) diverge, and where
+    the winner decides which payload is signed."""
     pdf = generate_turns_with_payload(n_convs=4, seed=11)
     dup = pdf.iloc[[0]].copy()
     dup["prio_params"] = [
         {**dup.iloc[0]["prio_params"], "epsilon": 9.9999}
     ]
+    dup["encrypted_shares"] = [
+        [
+            {**share, "payload": base64.b64encode(f"dup|{d}".encode()).decode()}
+            for share, d in zip(dup.iloc[0]["encrypted_shares"], ("pha", "fac"))
+        ]
+    ]
     pdf2 = pd.concat([pdf, dup], ignore_index=True)
-    return spark.createDataFrame(pdf2, schema=TURNS_WITH_PAYLOAD_SCHEMA), len(pdf)
+    return spark.createDataFrame(pdf2, schema=TURNS_WITH_PAYLOAD_SCHEMA), pdf
 
 
 @pytest.mark.parametrize(
@@ -66,11 +75,21 @@ def test_payload_dedup_consistent_across_paths(payload_with_prio_dup, opts):
     # ADVICE r3 #1 (the scalable case used to raise
     # UNRESOLVED_USING_COLUMN_FOR_JOIN on 'prio_params.bins') and #2 (the
     # fused case used to keep BOTH prio-divergent duplicates).
-    df, n_unique = payload_with_prio_dup
+    df, originals = payload_with_prio_dup
     packets, headers, _ = process_turns(df, opts)
     pk = packets.toPandas()
     # exactly one survivor per (conv_id, turn_idx) per destination
-    assert len(pk) == 2 * n_unique
+    assert len(pk) == 2 * len(originals)
+    # and every path keeps the same one: the original row, whose prio_params
+    # (smaller epsilon) order before the duplicate's, so all three emit the
+    # same payload per (uuid, destination)
+    want = {
+        (f"{r.conv_id}#{r.turn_idx}", dest): base64.b64decode(share["payload"])
+        for r in originals.itertuples()
+        for dest, share in zip(("pha", "facilitator"), r.encrypted_shares)
+    }
+    got = {(r.uuid, r.destination): bytes(r.encrypted_payload) for r in pk.itertuples()}
+    assert got == want
     assert pk.groupby(["conv_id", "turn_idx", "destination"]).size().max() == 1
     # no helper columns leak into the packet schema
     assert not any(c.startswith("_k_") for c in pk.columns)

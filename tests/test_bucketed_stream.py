@@ -1,8 +1,9 @@
-"""Bucketed stateful assembler (StreamOptions.bucket_by): output equality
-with the per-conversation assembler on multi-epoch out-of-order input, plus
-checkpoint resume. The per-conv path is the oracle — both run the SAME core
-functions, so this guards the state-layout plumbing (pickle blob, bucket-wide
-timeouts, per-conv routing inside a bucket)."""
+"""Bucketed stateful assembler (StreamOptions.bucket_by): output does not
+depend on the bucket count on multi-epoch out-of-order input, plus
+checkpoint resume. Every bucket count runs the SAME per-conversation core,
+so the equality guards the state-layout plumbing (pickle blob, bucket-wide
+timeouts, per-conv routing inside a bucket): one bucket holding every
+conversation, a few shared buckets, and more buckets than conversations."""
 
 from __future__ import annotations
 
@@ -72,12 +73,14 @@ def _epochs_multiwindow():
     {"mode": "session", "session_gap_s": 900, "watermark": "30 minutes"},
 ], ids=["tumbling", "session"])
 def test_bucketed_equals_per_conv(spark, tmp_path, mode_kw):
+    # bucket_by=4096 puts nearly every one of the ~40 conversations in its
+    # own state entry, the per-conversation layout; 1 puts all in one
     epochs = _epochs_multiwindow()
     results = {}
-    for name, bucket_by in (("perconv", None), ("bucketed", 7)):
-        inp = str(tmp_path / f"in-{name}")
-        out = str(tmp_path / f"out-{name}")
-        ck = str(tmp_path / f"ck-{name}")
+    for bucket_by in (7, 1, 4096):
+        inp = str(tmp_path / f"in-{bucket_by}")
+        out = str(tmp_path / f"out-{bucket_by}")
+        ck = str(tmp_path / f"ck-{bucket_by}")
         _write_epochs(spark, inp, epochs)
         q = start_stream_ingestion(
             spark, inp, out, ck,
@@ -85,9 +88,10 @@ def test_bucketed_equals_per_conv(spark, tmp_path, mode_kw):
                           bucket_by=bucket_by, **mode_kw),
         )
         q.awaitTermination(240)
-        results[name] = _packets(spark, out)
-    pd.testing.assert_frame_equal(results["perconv"], results["bucketed"])
-    assert len(results["bucketed"]) > 0
+        results[bucket_by] = _packets(spark, out)
+    pd.testing.assert_frame_equal(results[7], results[1])
+    pd.testing.assert_frame_equal(results[7], results[4096])
+    assert len(results[7]) > 0
 
 
 @pytest.mark.slow

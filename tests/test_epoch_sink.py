@@ -56,7 +56,7 @@ def _stream(spark, tmp, bucket_by):
     return out, jobs, len(q.recentProgress)
 
 
-@pytest.fixture(scope="module", params=[None, 4], ids=["per-conv", "bucketed"])
+@pytest.fixture(scope="module", params=[4], ids=["bucketed"])
 def streamed(request, spark, tmp_path_factory):
     return (spark, *_stream(spark, tmp_path_factory.mktemp("stream"), request.param))
 

@@ -3,6 +3,7 @@ resilient source option."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -64,6 +65,22 @@ def test_resume_with_changed_state_layout_is_refused(spark, tmp_path):
         spark, inp, out, ckpt, StreamOptions(batch_size=50, bucket_by=64)
     )
     q.awaitTermination(240)
+
+
+def test_per_conversation_checkpoint_is_refused(spark, tmp_path):
+    """A checkpoint recorded by the per-conversation state layout (bucket_by
+    null) cannot be resumed by the bucketed one; the field is named. No
+    bucket count below 1 is accepted."""
+    ckpt = tmp_path / "ck"
+    ckpt.mkdir()
+    (ckpt / "_enpa_options.json").write_text(
+        json.dumps({"bucket_by": None, "mode": "tumbling", "window_s": 3600, "session_gap_s": 1800})
+    )
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    with pytest.raises(CheckpointOptionsMismatch, match="bucket_by: checkpoint=None"):
+        start_stream_ingestion(spark, inp, out, str(ckpt), StreamOptions())
+    with pytest.raises(ValueError, match="bucket_by"):
+        start_stream_ingestion(spark, inp, out, str(tmp_path / "ck0"), StreamOptions(bucket_by=0))
 
 
 @pytest.mark.slow

@@ -79,7 +79,7 @@ def _start(spark, construct, root, inp, bucket_by):
         return start_stream_ingestion(
             spark, inp, f"{root}/out", f"{root}/ck",
             StreamOptions(batch_size=1000, window_s=3600,
-                          watermark="30 minutes", bucket_by=bucket_by or None),
+                          watermark="30 minutes", bucket_by=bucket_by),
             available_now=False, rocksdb_state=False,
         )
     if construct == "cep":
