@@ -108,15 +108,6 @@ def _rlen(buf: io.BytesIO, what: str) -> int:
     return n
 
 
-def _wbytes(buf, b: bytes | None):
-    if b is None:
-        _wv(buf, 0)  # union index 0 = null
-    else:
-        _wv(buf, 1)
-        _wv(buf, len(b))
-        buf.write(b)
-
-
 def encode_packet(
     uuid: str,
     encryption_key_id: str | None,

@@ -16,7 +16,7 @@ take rows already deduplicated by ``operators/dedup.py``'s winner rule and
 window-filtered, so they differ only in batch membership:
 - exact chunking (``assign_batches``): ``row_number() over (partition by
   key order by turn_idx)`` then ``floor((rn-1)/batch_size)``. A per-key sort;
-  after ``repartition(dedup key)`` it needs no exchange of its own
+  after ``shuffle_by(dedup key)`` it needs no exchange of its own
   (``dedup_window_chunk``). Matches the reference's "every batch except the
   last is exactly batch_size" property and gives a replay-stable membership.
 - scalable chunking for hot keys (``assign_batches_scalable``): a per-key
@@ -66,6 +66,16 @@ def assign_batches(
     )
 
 
+def shuffle_by(df: DataFrame, *cols: str) -> DataFrame:
+    """``df`` hash-repartitioned by ``cols`` into EXACTLY
+    ``spark.sql.shuffle.partitions`` partitions. AQE coalesces a plain
+    ``repartition(cols)`` to advisory-sized partitions; the batch job's
+    writer pass rides these exchanges, and coalesced it would run well
+    below the core count on large windows."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *cols)
+
+
 def dedup_window_chunk(
     df: DataFrame,
     batch_size: int,
@@ -76,7 +86,7 @@ def dedup_window_chunk(
     ts_col: str = "ts",
     dedup_key_cols: list[str] | None = None,
 ) -> DataFrame:
-    """D1+F1+G1 behind ONE exchange: ``repartition(dedup_key_cols)``, then
+    """D1+F1+G1 behind ONE exchange: ``shuffle_by(dedup_key_cols)``, then
     ``dedup_turns_deterministic`` on ``(dedup_key_cols, order_cols)``,
     ``window_filter`` and ``assign_batches`` on ``key_cols``.
 
@@ -91,7 +101,7 @@ def dedup_window_chunk(
     dedup_key_cols = dedup_key_cols or key_cols
     order_cols = order_cols or ["turn_idx"]
     deduped = dedup_turns_deterministic(
-        df.repartition(*dedup_key_cols), dedup_key_cols + order_cols
+        shuffle_by(df, *dedup_key_cols), dedup_key_cols + order_cols
     )
     return assign_batches(
         window_filter(deduped, window_start_s, duration_s, ts_col),

@@ -133,20 +133,3 @@ def _union_find_labels(pairs: DataFrame, rows: list, id_type) -> DataFrame:
             ]
         ),
     )
-
-
-def dedup_representatives(
-    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """One row per document: its component (itself if unpaired) and whether
-    it is the kept representative (min id of its component)."""
-    cc = connected_components(pairs)
-    return (
-        docs.select(id_col)
-        .join(cc, on=id_col, how="left")
-        .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("component"),
-        )
-        .withColumn("is_representative", F.col(id_col) == F.col("component"))
-    )

@@ -97,21 +97,6 @@ def shingles_df(
     )
 
 
-def minhash_signatures(
-    shingled: DataFrame, k: int = 8, id_col: str = "doc_id"
-) -> DataFrame:
-    """k MinHash components in ONE grouped aggregation (single shuffle).
-    Kept for pre-exploded inputs; ``band_signatures`` uses the zero-shuffle
-    array form instead."""
-    aggs = [
-        F.min(F.md5(F.concat_ws("#", F.col("shingle"), F.lit(str(i))))).alias(
-            f"mh_{i}"
-        )
-        for i in range(k)
-    ]
-    return shingled.groupBy(id_col).agg(*aggs)
-
-
 def _minhash_from_arrays(arrs: DataFrame, k: int, id_col: str) -> DataFrame:
     """r6b: MinHash per row from the shingle ARRAY — ``array_min`` over the
     per-element md5s — instead of explode → groupBy(id).agg(k mins). Same

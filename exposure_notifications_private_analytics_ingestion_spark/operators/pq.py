@@ -572,20 +572,6 @@ def _grouped_pq_adots(
     )
 
 
-def _approx_qdot(codes_a: Column, codes_b: Column, table: Column, ks: int) -> Column:
-    zipped = F.arrays_zip(codes_a.alias("ca"), codes_b.alias("cb"))
-    return F.aggregate(
-        F.transform(
-            zipped,
-            lambda s, i: F.element_at(
-                table, (i * ks * ks + s["ca"] * ks + s["cb"] + 1).cast("int")
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def pq_topk(
     df: DataFrame,
     k: int = 3,

@@ -28,16 +28,10 @@ scale breadth.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_LGK = 12  # 2^12 registers ≈ 0.8% relative standard error
-
-
-def hll_sketch(col: str | Column, lgk: int = DEFAULT_LGK) -> Column:
-    """Aggregate expression: build a binary HLL sketch of a column."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.hll_sketch_agg(c, lgk)
 
 
 def sketch_profile(

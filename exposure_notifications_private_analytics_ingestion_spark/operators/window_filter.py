@@ -41,17 +41,3 @@ def window_filter(
     return df.filter(
         F.col(ts_col).isNotNull() & (ts_ms >= F.lit(lo)) & (ts_ms < F.lit(hi))
     )
-
-
-def window_filter_counters(
-    df: DataFrame, start_s: int, duration_s: int, ts_col: str = "ts",
-    metric_col: str = "conv_id",
-) -> DataFrame:
-    """Per-metric included/excluded counts (DateFilterFn.java:33-44 analog)."""
-    ts_ms = ts_ms_col(ts_col)
-    lo, hi = start_s * 1000, (start_s + duration_s) * 1000
-    inside = F.col(ts_col).isNotNull() & (ts_ms >= lo) & (ts_ms < hi)
-    return df.groupBy(metric_col).agg(
-        F.sum(inside.cast("long")).alias("included"),
-        F.sum((~inside).cast("long")).alias("excluded"),
-    )

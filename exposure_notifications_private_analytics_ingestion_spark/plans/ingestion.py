@@ -16,18 +16,19 @@ and exact chunking alike; validation, window filter, attestation, r_pit and
 the packet fan-out ride that exchange (the hot-key chunker adds its own),
 and Catalyst pushes the window predicate into the scan (hour-partition
 pruning). The invalid-row counters are an ``Observation`` on the validated
-scan. ``run_ingestion`` then runs ONE action:
-packets repartitioned by ``batch_id`` and sorted by
-``(batch_id, destination, uuid)`` feed a ``mapInArrow`` writer that handles
-each (batch, destination) group in turn — packet rows, header with
+scan. ``run_ingestion`` then runs ONE action (``write_partition``), which
+rides the same exchange — a batch id is a function of the chunk key, so
+each batch sits in one partition: a ``mapInArrow`` writer sorts each task's
+packets by ``(batch_id, destination, uuid)`` and handles each
+(batch, destination) group in turn — packet rows, header with
 ``packet_file_digest`` (``build_headers``' definition), signature, and the
 ``.batch.avro`` container with its SHA-256 — the per-batch step of the
 reference's ``BatchWriterFn.java:104-239``. Tasks stream every leg into a
 per-run staging tree, and the driver swaps it into place only after the
 action succeeded. ``build_headers`` / ``build_signatures`` /
 ``sign_headers`` remain the DataFrame definitions of the same values. The
-streaming epoch sink (``streaming/sink.py``) runs the same writer pass and
-commit once per epoch, with its own header builder.
+streaming epoch sink (``streaming/sink.py``) writes each epoch through the
+same ``write_partition``.
 """
 
 from __future__ import annotations
@@ -70,7 +71,7 @@ from ..functions.signing import (
 )
 from ..model.validate import split_valid, with_rpit
 from ..operators.attestation import get_attestation
-from ..operators.batching import assign_batches, assign_batches_scalable
+from ..operators.batching import assign_batches, assign_batches_scalable, shuffle_by
 from ..operators.dedup import dedup_turns_deterministic
 from ..operators.packets import DESTINATIONS, split_packets, turn_uuid
 from ..operators.window_filter import window_filter
@@ -112,7 +113,8 @@ def process_turns(df: DataFrame, opts: IngestionOptions) -> tuple[DataFrame, Dat
 
 
 def _packets(valid: DataFrame, opts: IngestionOptions) -> DataFrame:
-    """dedup → window → (attest) → batch → r_pit → split, over validated rows."""
+    """r_pit → dedup → window → (attest) → batch → split, over validated
+    rows."""
     has_payload = "encrypted_shares" in valid.columns
     stage = get_attestation(opts.attestation)
 
@@ -123,6 +125,16 @@ def _packets(valid: DataFrame, opts: IngestionOptions) -> DataFrame:
     # Dedup is keyed on (key_cols, turn_idx) in ALL paths — duplicate turns
     # collapse to one row regardless of payload differences, matching the
     # reference's Distinct-by-path (IngestionPipeline.java:110-119).
+    if has_payload:
+        # V2 — rPit generated once per valid share BEFORE the fork, so both
+        # destinations carry the same value (DataShare.java:190-205; the
+        # fork-consistency contract of IngestionPipelineIT.java:601-630).
+        # Deterministic (md5-of-uuid rejection sampling) rather than
+        # SecureRandom, so re-runs are idempotent. Computed before the
+        # exchange from the row's own uuid and bins, so the winner keeps its
+        # value (as the last column it never decides the winner), and the
+        # UDF's Python worker is not a second one beside the writer's.
+        valid = with_rpit(valid, turn_uuid(), F.col("prio_params.bins"))
     dedup_keys = list(opts.key_cols)
     if opts.scalable_chunking:
         # hot keys: dedup exchanges on the full (key, turn_idx), so no
@@ -130,8 +142,10 @@ def _packets(valid: DataFrame, opts: IngestionOptions) -> DataFrame:
         rows, chunk = valid, assign_batches_scalable
     else:
         # one exchange on the dedup keys serves dedup and exact chunking,
-        # whose keys extend them; a narrow stage rides it too
-        rows, chunk = valid.repartition(*dedup_keys), assign_batches
+        # whose keys extend them; a narrow stage and the writer ride it too:
+        # a batch id is a function of the chunk key, so each batch sits in
+        # one partition
+        rows, chunk = shuffle_by(valid, *dedup_keys), assign_batches
     rows = window_filter(
         dedup_turns_deterministic(rows, dedup_keys + ["turn_idx"]),
         opts.window_start_s,
@@ -156,14 +170,10 @@ def _packets(valid: DataFrame, opts: IngestionOptions) -> DataFrame:
     drop_helper = [c for c in batched.columns if c.startswith("_k_")]
     if drop_helper:
         batched = batched.drop(*drop_helper)
-    if has_payload:
-        # V2 — rPit generated once per valid share BEFORE the fork, so both
-        # destinations carry the same value (DataShare.java:190-205; the
-        # fork-consistency contract of IngestionPipelineIT.java:601-630).
-        # Deterministic (md5-of-uuid rejection sampling) rather than
-        # SecureRandom, so re-runs are idempotent.
-        batched = with_rpit(batched, turn_uuid(), F.col("prio_params.bins"))
-    return split_packets(batched)
+    packets = split_packets(batched)
+    # the hash-routed chunker spreads each batch over partitions; the writer
+    # needs each batch whole in one
+    return shuffle_by(packets, "batch_id") if opts.scalable_chunking else packets
 
 
 # header Prio metadata of plain transcript batches (ENPA deployment values),
@@ -426,15 +436,6 @@ def _window_header_row(spark: SparkSession, opts: IngestionOptions, has_prio: bo
     return header_row
 
 
-def _by_batch(df: DataFrame) -> DataFrame:
-    """``df`` repartitioned by ``batch_id``. The EXPLICIT partition count
-    pins the writer's parallelism: AQE coalesces a plain repartition(col) to
-    advisory-sized partitions, which caps the pass well below the core count
-    on large windows."""
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(n_part, "batch_id")
-
-
 def _writer_pass(
     packets: DataFrame,
     staging: str,
@@ -444,11 +445,11 @@ def _writer_pass(
     signing: tuple[bytes | None, str] | None = None,
     containers: tuple[str, str] | None = None,
 ) -> list:
-    """One action that writes every output leg executor-side.
+    """One action that writes every output leg executor-side, over the
+    partitioning ``packets`` already has (``write_partition`` drives it).
 
-    ``packets`` must hold each batch in one partition; a batch split over
-    tasks comes back in several results' ``batch_ids``, each task having
-    written a partial header for it. Each task sorts its
+    A batch split over tasks comes back in several results' ``batch_ids``,
+    each task having written a partial header for it. Each task sorts its
     rows by ``(batch_id, destination, uuid)`` and walks its
     (batch, destination) groups in turn. Per group it appends the packet
     rows and the header ``header_row(batch_id, destination, group, digest)``
@@ -658,6 +659,40 @@ def _commit(staging: str, output_root: str, partition: str, written: set[str]) -
         raise
 
 
+def write_partition(
+    packets: DataFrame,
+    root: str,
+    partition: str,
+    schemas: dict[str, pa.Schema],
+    header_row: Callable[[str, str, pa.Table, str], dict],
+    ts_col: str,
+    signing: tuple[bytes | None, str] | None = None,
+    containers: tuple[str, str] | None = None,
+    empty_legs: tuple[str, ...] = (),
+) -> list:
+    """Stage → write each batch whole → commit ``partition``, the output
+    protocol of the batch job (``window_start_s=W``) and of the epoch sink
+    (``epoch=E``). The writer pass runs on the frame's own partitioning; if
+    a batch id comes back from two tasks it runs once more over ``packets``
+    repartitioned by ``batch_id``, and ``_commit`` drops the first pass's
+    files because no result names them. A partition with no packets gets a
+    zero-row file for each of ``empty_legs``. Returns the task results."""
+    with _staging_tree(root) as staging:
+
+        def write(df: DataFrame) -> list:
+            return _writer_pass(df, staging, schemas, header_row, ts_col, signing, containers)
+
+        results = write(packets)
+        ids = [b for r in results for b in r["batch_ids"]]
+        if len(ids) != len(set(ids)):
+            results = write(shuffle_by(packets, "batch_id"))
+        written = {f for r in results for f in r["files"]}
+        if not written:
+            written = _write_empty_legs(staging, empty_legs, schemas)
+        _commit(staging, root, partition, written)
+    return results
+
+
 def _local_root(output_root: str) -> str:
     """``output_root`` as a local path. Tasks write their files straight
     into it, so it must be a directory the driver and every executor share:
@@ -707,8 +742,7 @@ def run_ingestion(
     ``ValueError``, because tasks write their files directly.
 
     Returns the M2 counters: invalid rows per reason (non-zero only), and
-    ``packets_written``, ``batches_approx`` (exact), ``min_ts``, ``max_ts``
-    as strings.
+    ``packets_written``, ``batches``, ``min_ts``, ``max_ts`` as strings.
     """
     output_root = _local_root(output_root)
     df = spark.read.parquet(input_path)
@@ -727,27 +761,29 @@ def run_ingestion(
         if opts.emit_avro_containers
         else None
     )
-    header_row = _window_header_row(spark, opts, "bins" in packets.columns)
-    with _staging_tree(output_root) as staging:
-        results = _writer_pass(
-            _by_batch(packets), staging, schemas, header_row, "ts", signing, containers
-        )
-        written = {f for r in results for f in r["files"]}
-        if not written:
-            written = _write_empty_legs(staging, legs, schemas)
-        _commit(staging, output_root, f"window_start_s={opts.window_start_s}", written)
+    results = write_partition(
+        packets,
+        output_root,
+        f"window_start_s={opts.window_start_s}",
+        schemas,
+        _window_header_row(spark, opts, "bins" in packets.columns),
+        "ts",
+        signing,
+        containers,
+        empty_legs=legs,
+    )
     if opts.signing_key_pem is not None:
         # publish the verification material (key id + public key DER) —
         # the sandbox analog of the KMS key resource name the reference's
-        # downstream resolves (IngestionPipelineIT.java:700-721)
-        with open(os.path.join(output_root, "signing_key.json"), "w") as fh:
-            json.dump(
-                {
-                    "key_identifier": opts.signing_key_id,
-                    "public_key_der_b64": public_key_der_b64(opts.signing_key_pem),
-                },
-                fh,
-            )
+        # downstream resolves (IngestionPipelineIT.java:700-721); atomic,
+        # so a verifier never reads a partial file
+        key = {
+            "key_identifier": opts.signing_key_id,
+            "public_key_der_b64": public_key_der_b64(opts.signing_key_pem),
+        }
+        write_file_atomic(
+            os.path.join(output_root, "signing_key.json"), json.dumps(key).encode()
+        )
 
     # M2 counters (Beam Metrics analog, model/DataShare.java:46-55). The
     # Observation has a value only when packets reached the writer: a scan
@@ -760,7 +796,7 @@ def run_ingestion(
     stats: dict[str, int | str] = {r: n for r, n in invalid.items() if n}
     stats.update(
         packets_written=str(sum(r["packets"] for r in results)),
-        batches_approx=str(len({b for r in results for b in r["batch_ids"]})),
+        batches=str(len({b for r in results for b in r["batch_ids"]})),
         min_ts=str(min((r["min_ts"] for r in results), default=None)),
         max_ts=str(max((r["max_ts"] for r in results), default=None)),
     )

@@ -1,11 +1,11 @@
 """Exactly-once epoch sink for the streaming CEP core.
 
-Each epoch's closed batches go through the batch job's writer pass
-(``plans/ingestion.py::_writer_pass``): ONE Spark action, in which each task
-writes the packet rows and the header — with ``packet_file_digest``, the one
-Python definition both jobs use — of each (batch, destination) group into a
-staging tree, which the driver then swaps into the legs' ``epoch=E``
-partitions (``_commit``). foreachBatch hands a retried epoch the same id, so
+Each epoch's closed batches go through the batch job's write entry
+(``plans/ingestion.py::write_partition``): ONE Spark action, in which each
+task writes the packet rows and the header — with ``packet_file_digest``,
+the one Python definition both jobs use — of each (batch, destination)
+group into a staging tree, which the driver then swaps into the legs'
+``epoch=E`` partitions. foreachBatch hands a retried epoch the same id, so
 a retry replaces exactly its own partitions and the sink is exactly-once, as
 the reference's deterministic file UUIDs make its batch job
 (``BatchWriterFn.java:135-150``).
@@ -22,9 +22,9 @@ Each epoch that closes rows writes:
 No shuffle of its own: the writer needs each batch in one task, and the
 assembler emits a closed batch from the state group holding its
 conversation, so each batch already sits in one partition of the stateful
-operator's output; the pass only sorts within partitions. The driver checks
-that no batch id came back from two tasks. A frame not clustered that way —
-a caller's own — is written once more, repartitioned by ``batch_id``.
+operator's output; the pass only sorts within partitions. A frame not
+clustered that way — a caller's own — is written once more, repartitioned
+by ``batch_id`` (``write_partition``'s rule).
 """
 
 from __future__ import annotations
@@ -39,14 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.packets import DESTINATIONS
-from ..plans.ingestion import (
-    _by_batch,
-    _commit,
-    _data_schema,
-    _local_root,
-    _staging_tree,
-    _writer_pass,
-)
+from ..plans.ingestion import _data_schema, _local_root, write_partition
 
 # the header leg's file schema; its files carry ``destination`` as a column
 EPOCH_HEADERS_SCHEMA = pa.schema(
@@ -109,20 +102,11 @@ def make_epoch_sink(output_root: str):
             "packets": _data_schema(packets.schema),
             "batch_headers": EPOCH_HEADERS_SCHEMA,
         }
-        with _staging_tree(root) as staging:
-            results = _writer_pass(packets, staging, schemas, _header_row, "ts_ms")
-            ids = [b for r in results for b in r["batch_ids"]]
-            if len(ids) != len(set(ids)):
-                # a batch split over tasks has partial headers; the first
-                # pass's files are not in the second pass's results, so
-                # _commit drops them
-                results = _writer_pass(
-                    _by_batch(packets), staging, schemas, _header_row, "ts_ms"
-                )
-            if not results:
-                return
-            written = {f for r in results for f in r["files"]}
-            _commit(staging, root, f"epoch={epoch_id}", written)
+        results = write_partition(
+            packets, root, f"epoch={epoch_id}", schemas, _header_row, "ts_ms"
+        )
+        if not results:
+            return
         rec = {
             "epoch": epoch_id,
             # every closed turn is one packet per destination

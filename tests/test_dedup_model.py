@@ -6,7 +6,9 @@ and a conversation larger than the batch size. The default and attested
 paths must match the model row for row (winner payload, event time and
 batch id, which names the batch ordinal); the hot-key path must keep the
 same winners. Also pins the core's plan: one Exchange on the exact path,
-attested or not."""
+attested or not. The bucketed stream is driven against a first-arrival
+variant of the model over several availableNow restarts of one
+checkpoint."""
 
 from __future__ import annotations
 
@@ -16,6 +18,8 @@ from typing import NamedTuple
 
 import pandas as pd
 import pytest
+import random
+
 from hypothesis import example, given, settings, strategies as st
 from pandas.testing import assert_frame_equal
 from pyspark.sql import functions as F
@@ -32,6 +36,10 @@ from exposure_notifications_private_analytics_ingestion_spark.plans.ingestion im
 from exposure_notifications_private_analytics_ingestion_spark.sources import (
     generate_turns,
     generate_turns_with_payload,
+)
+from exposure_notifications_private_analytics_ingestion_spark.streaming import (
+    StreamOptions,
+    start_stream_ingestion,
 )
 
 START = 1704067200 + 3600
@@ -192,3 +200,124 @@ def test_exact_path_plans_one_exchange(spark, payload, attestation):
     packets, _, _ = process_turns(df, IngestionOptions(attestation=attestation))
     plan = packets._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
+
+
+def first_arrival_model(epochs: list[list[Turn]], batch_size: int, window_s: int) -> pd.DataFrame:
+    """The stream's rule: rows (conv_id, turn_idx, window_start_s, text,
+    batch_id), by key.
+
+    validate: a turn needs ts and text. Epochs are taken in order, and in an
+    epoch each conversation's rows by (ts in ms, turn_idx, text). Per
+    (conversation, tumbling window) the first row of each turn_idx wins and
+    joins the window's buffer; every ``batch_size`` buffered rows close a
+    batch, and the rest closes when the watermark passes the window. Batch
+    id uuid5(conv|window|ordinal)."""
+    seen: dict[tuple, set] = {}
+    buf: dict[tuple, list] = {}
+    ordinal: dict[tuple, int] = {}
+    out = []
+
+    def close(k, n):
+        conv, w = k
+        bid = str(uuid.uuid5(NAMESPACE, f"{conv}|{w}|{ordinal[k]}"))
+        out.extend((conv, idx, w, text, bid) for idx, text in buf[k][:n])
+        buf[k] = buf[k][n:]
+        ordinal[k] += 1
+
+    for epoch in epochs:
+        rows = sorted(
+            (t.conv_id, t.ts_us // 1000, t.turn_idx, t.text)
+            for t in epoch
+            if t.ts_us is not None and t.text is not None
+        )
+        for conv, ts_ms, idx, text in rows:
+            k = (conv, ts_ms // 1000 // window_s * window_s)
+            if idx in seen.setdefault(k, set()):
+                continue
+            seen[k].add(idx)
+            buf.setdefault(k, []).append((idx, text))
+            ordinal.setdefault(k, 0)
+            if len(buf[k]) == batch_size:
+                close(k, batch_size)
+    for k in sorted(buf):
+        if buf[k]:
+            close(k, len(buf[k]))
+    cols = ["conv_id", "turn_idx", "window_start_s", "text", "batch_id"]
+    return pd.DataFrame(sorted(out), columns=cols)
+
+
+def _restarts(seed: int) -> list[list[list[Turn]]]:
+    """Three availableNow restarts of single-file epochs over two hourly
+    windows. Conflicting duplicates (same key and window, another text and
+    event time) land in the same epoch and in later epochs, a later one
+    often with the smaller text, which the batch rule would pick; one
+    conversation size-closes a batch before a duplicate of its rows
+    arrives; some rows have no text. The last restart moves the watermark
+    past both windows."""
+    rnd = random.Random(seed)
+    t0 = START * US
+    epochs: list[list[Turn]] = [[], [], [], []]
+    for conv in ("a", "b", "c", "d"):
+        for idx in range(rnd.randint(2, 7)):
+            w = rnd.randrange(2) * DUR * US
+            first = rnd.randrange(4)
+            text = rnd.choice(["m", "n", None] if idx else ["m"])
+            epochs[first].append(Turn(conv, idx, "user", text, None, t0 + w + rnd.randrange(DUR) * US))
+            for _ in range(rnd.randint(0, 2)):  # conflicting duplicates
+                e = rnd.randrange(first, 4)
+                ts = t0 + w + rnd.randrange(DUR) * US
+                epochs[e].append(Turn(conv, idx, "user", rnd.choice("alz"), None, ts))
+    # a same-millisecond tie in one epoch: the smaller text arrives first
+    epochs[1] += [Turn("tie", 0, "user", "y", None, t0), Turn("tie", 0, "user", "x", None, t0)]
+    # a batch size-closed in the first epoch, then a duplicate of its row
+    epochs[0] += [Turn("hot", i, "user", f"h{i}", None, t0 + (10 + i) * US) for i in range(2 * BATCH + 1)]
+    epochs[3].append(Turn("hot", 1, "user", "a", None, t0))
+    far = t0 + 24 * 3600 * US
+    advance = [Turn("wm", i, "user", "w", None, far) for i in range(BATCH - 1)]
+    return [[epochs[0], epochs[1]], [epochs[2]], [epochs[3], advance]]
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("seed", [1, 2])
+def test_stream_keeps_the_first_arrival(spark, tmp_path, seed):
+    """The bucketed stream against the first-arrival model: winner text,
+    window and batch id of every emitted turn, over three restarts of one
+    checkpoint with one file per epoch."""
+    restarts = _restarts(seed)
+    inp, out, ck = (str(tmp_path / d) for d in ("in", "out", "ck"))
+    opts = StreamOptions(
+        batch_size=BATCH, window_s=DUR, watermark="3 hours", max_files_per_trigger=1, bucket_by=2
+    )
+    for files in restarts:
+        for rows in files:
+            spark.createDataFrame(
+                [(*t[:5], EPOCH + timedelta(microseconds=t.ts_us)) for t in rows],
+                schema=TURNS_SCHEMA,
+            ).coalesce(1).write.mode("append").parquet(inp)
+        q = start_stream_ingestion(spark, inp, out, ck, opts)
+        q.awaitTermination(240)
+        assert q.exception() is None
+    got = (
+        spark.read.parquet(f"{out}/packets")
+        .filter("destination = 'pha' AND conv_id != 'wm'")
+        .select(
+            "conv_id",
+            "turn_idx",
+            "window_start_s",
+            F.decode("encrypted_payload", "UTF-8").alias("text"),
+            "batch_id",
+        )
+        .toPandas()
+        .sort_values(["conv_id", "turn_idx", "window_start_s", "text", "batch_id"])
+        .reset_index(drop=True)
+        .astype({"turn_idx": "int64", "window_start_s": "int64"})
+    )
+    epochs = [rows for files in restarts for rows in files]
+    want = first_arrival_model(epochs, BATCH, DUR)
+    assert_frame_equal(got, want[want.conv_id != "wm"].reset_index(drop=True))
+    # the batch rule (smallest text) would have picked other winners
+    batch_rule = {}
+    for t in (t for rows in epochs for t in rows if t.text is not None and t.conv_id != "wm"):
+        k = (t.conv_id, t.turn_idx)
+        batch_rule[k] = min(batch_rule.get(k, t.text), t.text)
+    assert any(batch_rule[(c, i)] != x for c, i, x in zip(got.conv_id, got.turn_idx, got.text))

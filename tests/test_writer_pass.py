@@ -3,7 +3,9 @@ DataFrame definitions they replace (build_headers, build_signatures,
 sign_headers' verifier, write_batch_containers, split_valid), empty windows
 that leave other windows alone, a re-run failing in the writer or in the
 commit that leaves the previous output as it was, the local output root,
-and the number of Spark jobs one window costs."""
+an atomic signing_key.json, the number of Spark jobs one window costs, and
+the writer riding the core's exchange (one by batch id on the hot-key
+path)."""
 
 from __future__ import annotations
 
@@ -126,7 +128,7 @@ def test_invalid_counters_equal_split_valid(written):
         df = df.filter(F.col("ts_hour").isin(ingestion._scan_hours(opts))).drop("ts_hour")
     ref = {r["invalid_reason"]: r["n"] for r in split_valid(df)[1].collect()}
     assert ref and all(n > 0 for n in ref.values())
-    totals = ("packets_written", "batches_approx", "min_ts", "max_ts")
+    totals = ("packets_written", "batches", "min_ts", "max_ts")
     assert {k: v for k, v in stats.items() if k not in totals} == ref
 
 
@@ -238,7 +240,7 @@ def test_empty_window_keeps_earlier_windows(spark, tmp_path, partition_by_hour):
     stats = run_ingestion(spark, inp, out, empty)
     assert stats == {
         "packets_written": "0",
-        "batches_approx": "0",
+        "batches": "0",
         "min_ts": "None",
         "max_ts": "None",
     }
@@ -321,10 +323,11 @@ def test_output_root_must_be_local(spark, tmp_path):
     assert int(stats["packets_written"]) == packets.count() > 0
 
 
-def test_one_window_runs_at_most_five_spark_jobs(spark, tmp_path):
+def test_one_window_runs_at_most_three_spark_jobs(spark, tmp_path):
     """The writer pass makes a window one action (plus the input's schema
-    read); the legs, the digest, the signatures and the counters must not
-    come back as passes of their own."""
+    read) whose writer rides the core's exchange; the legs, the digest, the
+    signatures and the counters must not come back as passes of their own,
+    nor the writer's input as a second shuffle."""
     inp = write_turns_table(
         spark, generate_turns(n_convs=10, seed=2, hours=2), str(tmp_path / "turns")
     )
@@ -344,4 +347,100 @@ def test_one_window_runs_at_most_five_spark_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert int(stats["packets_written"]) > 0
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 5, f"{len(jobs)} Spark jobs for one window"
+    assert 0 < len(jobs) <= 3, f"{len(jobs)} Spark jobs for one window"
+
+
+def _writer_inputs(monkeypatch) -> list:
+    """Records the frame of every writer pass run_ingestion runs."""
+    seen, real = [], ingestion._writer_pass
+
+    def spy(packets, *args):
+        seen.append(packets)
+        return real(packets, *args)
+
+    monkeypatch.setattr(ingestion, "_writer_pass", spy)
+    return seen
+
+
+@pytest.mark.parametrize("attestation", [None, "signature_presence"], ids=["default", "attested"])
+def test_writer_rides_the_core_exchange(spark, tmp_path, monkeypatch, attestation):
+    """On the exact path each batch already sits in one partition of the
+    core's shuffle by the dedup key: the writer's input has that one
+    Exchange and nothing more, and one pass writes the window."""
+    inp = _prio_corpus(spark, str(tmp_path / "docs"))
+    seen = _writer_inputs(monkeypatch)
+    opts = IngestionOptions(
+        window_start_s=JAN, duration_s=3 * 3600, batch_size=6, attestation=attestation
+    )
+    stats = run_ingestion(spark, inp, str(tmp_path / "out"), opts)
+    assert int(stats["packets_written"]) > 0 and len(seen) == 1
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+
+
+def test_hot_key_path_writes_each_batch_in_one_pass(spark, tmp_path, monkeypatch):
+    """The hash-routed chunker spreads each batch over the partitions of
+    the dedup shuffle on (key, turn_idx), so its branch exchanges by batch
+    id itself: one writer pass, no retry, and one header per
+    (batch, destination) with build_headers' values. AQE coalescing is off
+    so that the small input keeps every partition, as a large window does."""
+    inp = _prio_corpus(spark, str(tmp_path / "docs"))
+    seen = _writer_inputs(monkeypatch)
+    opts = IngestionOptions(
+        window_start_s=JAN,
+        duration_s=3 * 3600,
+        batch_size=6,
+        scalable_chunking=True,
+        emit_avro_containers=True,
+    )
+    out = str(tmp_path / "out")
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        run_ingestion(spark, inp, out, opts)
+    finally:
+        spark.conf.set(coalesce, was)
+    assert len(seen) == 1
+    got = _rows(spark, f"{out}/batch_headers")
+    keys = [(r["batch_id"], r["destination"]) for r in got]
+    assert len(keys) == len(set(keys)) > 0
+    assert got == _rows_of(build_headers(spark.read.parquet(f"{out}/packets"), opts))
+
+
+def test_signing_key_file_is_never_partial(spark, tmp_path, monkeypatch):
+    """signing_key.json is replaced whole: a run that fails while encoding
+    it leaves the previous file as it was, not a truncated one."""
+    inp = write_turns_table(
+        spark, generate_turns(n_convs=4, seed=3, hours=1), str(tmp_path / "turns")
+    )
+    out = str(tmp_path / "out")
+    opts = IngestionOptions(
+        window_start_s=JAN,
+        duration_s=3600,
+        batch_size=8,
+        signing_key_pem=generate_signing_key_pem("atomic-key-test"),
+    )
+    run_ingestion(spark, inp, out, opts)
+    with open(f"{out}/signing_key.json") as fh:
+        before = fh.read()
+    real_dump, real_dumps = json.dump, json.dumps
+
+    def failing(real):
+        def encode(obj, *args, **kw):
+            if not (isinstance(obj, dict) and "public_key_der_b64" in obj):
+                return real(obj, *args, **kw)
+            if args:  # json.dump: part of the text reaches the file first
+                args[0].write('{"key_identifier": ')
+            raise RuntimeError("injected encoding failure")
+
+        return encode
+
+    monkeypatch.setattr(json, "dump", failing(real_dump))
+    monkeypatch.setattr(json, "dumps", failing(real_dumps))
+    with pytest.raises(RuntimeError, match="injected encoding failure"):
+        run_ingestion(spark, inp, out, opts)
+    monkeypatch.undo()
+    with open(f"{out}/signing_key.json") as fh:
+        assert fh.read() == before
+    assert json.loads(before)["key_identifier"] == opts.signing_key_id
