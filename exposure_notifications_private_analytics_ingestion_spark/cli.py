@@ -173,7 +173,8 @@ def main(argv: list[str] | None = None) -> int:
             signing_key_pem=signing_pem,
         )
         stats = run_ingestion(spark, args.input, args.output, opts)
-        print(json.dumps({"window_start": start, "invalid_counters": stats}))
+        run = {k: stats.pop(k) for k in ("packets_written", "batches", "min_ts", "max_ts")}
+        print(json.dumps({"window_start": start, **run, "invalid_counters": stats}))
     elif args.cmd == "stream":
         q = start_stream_ingestion(
             spark,

@@ -4,8 +4,8 @@ re-expressed as a continuous CEP pipeline.
 Reference semantics → streaming mapping (SURVEY §2/§3):
 - hourly scan window + ±grace re-scan  → event-time watermark = grace hours
   (``IngestionPipelineOptions.java:141-163``)
-- Distinct on document path            → in-state dedup set per conv_id
-  (``IngestionPipeline.java:110-119``)    and open window
+- Distinct on document path            → in-state dedup over every open
+  (``IngestionPipeline.java:110-119``)    window of the conv_id
 - GroupIntoBatches + batch-id          → ``applyInPandasWithState`` keyed by
   ``hash(conv_id) % bucket_by``: per-conv open-batch buffers in state,
   closed on size OR when the watermark passes the turn's tumbling-window
@@ -16,13 +16,15 @@ Reference semantics → streaming mapping (SURVEY §2/§3):
   under an epoch-keyed path with overwrite, so Spark's epoch-retry lands on
   the same files — exactly-once end to end
 
-Dedup lives INSIDE the state function (seen turn_idx per conv within the
-open window) rather than chaining ``dropDuplicatesWithinWatermark`` before
-the flatMapGroupsWithState op — one stateful operator instead of two stacked
-state stores, which halves state-store IO and sidesteps multi-stateful-op
-output-mode restrictions. State is watermark-bounded: when a window closes,
-its dedup set is discarded (the reference bounds work identically by only
-re-scanning ±grace hours).
+Dedup lives INSIDE the state function (a row is dropped when any open
+window or session of its conv has seen its turn_idx) rather than chaining
+``dropDuplicatesWithinWatermark`` before the flatMapGroupsWithState op — one
+stateful operator instead of two stacked state stores, which halves
+state-store IO and sidesteps multi-stateful-op output-mode restrictions.
+State is watermark-bounded: when a window closes, its dedup set is
+discarded (the reference bounds work identically by only re-scanning
+±grace hours). A duplicate that arrives after its original's window was
+evicted is outside that state horizon and is not caught.
 
 Dedup winner: the FIRST ARRIVAL wins. Within one micro-batch a
 conversation's rows are taken in ``(ts, turn_idx, text)`` order, so among
@@ -186,10 +188,15 @@ def _ingest_sorted(
     gap_ms: int,
 ) -> None:
     """Route one conversation's (sorted) incoming rows into its open
-    windows/sessions: assign window, bridge-merge sessions, in-state dedup,
+    windows/sessions: in-state dedup, assign window, bridge-merge sessions,
     buffer, drain size-closes."""
     for ts_ms, turn_idx, text in rows:
         turn_idx = int(turn_idx)
+        # stateful dedup (D1) over every open window/session of the
+        # conversation: a duplicate with another event time may fall in
+        # another window, and the batch job dedups before windowing
+        if any(turn_idx in e[2] for e in wins.values()):
+            continue
         if session_mode:
             # find a session this row extends: [start-gap, last+gap]
             w = None
@@ -226,7 +233,9 @@ def _ingest_sorted(
             if merged:
                 # a turn buffered in BOTH pre-merge sessions (or buffered in
                 # one and already emitted by the other) must survive at most
-                # once: keep first unemitted occurrence per turn_idx
+                # once: keep first unemitted occurrence per turn_idx. The
+                # dedup above keeps sessions' seen-sets disjoint, but state
+                # checkpointed with per-session dedup sets may overlap
                 seen_buf: set = set(emitted)
                 b3, b4, b5 = [], [], []
                 for ti, tx, tm in zip(e[3], e[4], e[5]):
@@ -246,8 +255,6 @@ def _ingest_sorted(
             if e is None:
                 e = wins[w] = [0, ts_ms, set(), [], [], []]
             e[1] = max(e[1], ts_ms)
-        if turn_idx in e[2]:  # stateful dedup (D1), per window
-            continue
         e[2].add(turn_idx)
         e[3].append(turn_idx)
         e[4].append(text)

@@ -80,6 +80,30 @@ def test_cli_ingest_with_asymmetric_signing(spark, turns_path, tmp_path, capsys)
         )
 
 
+def test_cli_ingest_prints_run_counters_apart_from_invalid_rows(spark, tmp_path, capsys):
+    """``invalid_counters`` holds invalid-row reasons only; the run's own
+    counters are top-level fields."""
+    pdf = generate_turns(n_convs=8, seed=4, hours=1, dup_frac=0.0)
+    pdf.loc[pdf.index[:3], "text"] = None
+    inp = str(tmp_path / "turns")
+    spark.createDataFrame(pdf, schema=TURNS_SCHEMA).write.parquet(inp)
+    out = str(tmp_path / "out")
+
+    rc = cli.main(
+        ["ingest", "--input", inp, "--output", out,
+         "--window-start", str(JAN), "--duration", str(48 * 3600),
+         "--batch-size", "10"]
+    )
+    assert rc == 0
+    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert res["invalid_counters"] == {"missing_payload": 3}
+    assert int(res["packets_written"]) == spark.read.parquet(f"{out}/packets").count() > 0
+    assert int(res["batches"]) == (
+        spark.read.parquet(f"{out}/batch_headers").select("batch_id").distinct().count()
+    )
+    assert res["min_ts"] <= res["max_ts"]
+
+
 def test_cli_stream_bucketed(spark, turns_path, tmp_path):
     path, n = turns_path
     out = str(tmp_path / "sout")

@@ -208,11 +208,12 @@ def first_arrival_model(epochs: list[list[Turn]], batch_size: int, window_s: int
 
     validate: a turn needs ts and text. Epochs are taken in order, and in an
     epoch each conversation's rows by (ts in ms, turn_idx, text). Per
-    (conversation, tumbling window) the first row of each turn_idx wins and
-    joins the window's buffer; every ``batch_size`` buffered rows close a
-    batch, and the rest closes when the watermark passes the window. Batch
-    id uuid5(conv|window|ordinal)."""
-    seen: dict[tuple, set] = {}
+    conversation the first row of each turn_idx wins, whatever its window,
+    and joins the buffer of its tumbling window; every ``batch_size``
+    buffered rows close a batch, and the rest closes when the watermark
+    passes the window. Batch id uuid5(conv|window|ordinal). No window is
+    evicted before the end, so every duplicate is inside the state horizon."""
+    seen: dict[str, set] = {}
     buf: dict[tuple, list] = {}
     ordinal: dict[tuple, int] = {}
     out = []
@@ -232,9 +233,9 @@ def first_arrival_model(epochs: list[list[Turn]], batch_size: int, window_s: int
         )
         for conv, ts_ms, idx, text in rows:
             k = (conv, ts_ms // 1000 // window_s * window_s)
-            if idx in seen.setdefault(k, set()):
+            if idx in seen.setdefault(conv, set()):
                 continue
-            seen[k].add(idx)
+            seen[conv].add(idx)
             buf.setdefault(k, []).append((idx, text))
             ordinal.setdefault(k, 0)
             if len(buf[k]) == batch_size:
@@ -277,13 +278,10 @@ def _restarts(seed: int) -> list[list[list[Turn]]]:
     return [[epochs[0], epochs[1]], [epochs[2]], [epochs[3], advance]]
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize("seed", [1, 2])
-def test_stream_keeps_the_first_arrival(spark, tmp_path, seed):
-    """The bucketed stream against the first-arrival model: winner text,
-    window and batch id of every emitted turn, over three restarts of one
-    checkpoint with one file per epoch."""
-    restarts = _restarts(seed)
+def _stream_emitted(spark, tmp_path, restarts: list[list[list[Turn]]]) -> pd.DataFrame:
+    """Run one ``availableNow`` restart per entry of ``restarts`` on one
+    checkpoint, one file per epoch; the emitted pha packets of every
+    conversation but the watermark advancer, in the model's columns."""
     inp, out, ck = (str(tmp_path / d) for d in ("in", "out", "ck"))
     opts = StreamOptions(
         batch_size=BATCH, window_s=DUR, watermark="3 hours", max_files_per_trigger=1, bucket_by=2
@@ -297,7 +295,7 @@ def test_stream_keeps_the_first_arrival(spark, tmp_path, seed):
         q = start_stream_ingestion(spark, inp, out, ck, opts)
         q.awaitTermination(240)
         assert q.exception() is None
-    got = (
+    return (
         spark.read.parquet(f"{out}/packets")
         .filter("destination = 'pha' AND conv_id != 'wm'")
         .select(
@@ -312,12 +310,42 @@ def test_stream_keeps_the_first_arrival(spark, tmp_path, seed):
         .reset_index(drop=True)
         .astype({"turn_idx": "int64", "window_start_s": "int64"})
     )
+
+
+def _first_arrivals(restarts: list[list[list[Turn]]]) -> pd.DataFrame:
+    want = first_arrival_model([rows for files in restarts for rows in files], BATCH, DUR)
+    return want[want.conv_id != "wm"].reset_index(drop=True)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("seed", [1, 2])
+def test_stream_keeps_the_first_arrival(spark, tmp_path, seed):
+    """The bucketed stream against the first-arrival model: winner text,
+    window and batch id of every emitted turn, over three restarts of one
+    checkpoint with one file per epoch."""
+    restarts = _restarts(seed)
+    got = _stream_emitted(spark, tmp_path, restarts)
+    assert_frame_equal(got, _first_arrivals(restarts))
     epochs = [rows for files in restarts for rows in files]
-    want = first_arrival_model(epochs, BATCH, DUR)
-    assert_frame_equal(got, want[want.conv_id != "wm"].reset_index(drop=True))
     # the batch rule (smallest text) would have picked other winners
     batch_rule = {}
     for t in (t for rows in epochs for t in rows if t.text is not None and t.conv_id != "wm"):
         k = (t.conv_id, t.turn_idx)
         batch_rule[k] = min(batch_rule.get(k, t.text), t.text)
     assert any(batch_rule[(c, i)] != x for c, i, x in zip(got.conv_id, got.turn_idx, got.text))
+
+
+@pytest.mark.slow
+def test_stream_emits_a_duplicate_from_another_window_once(spark, tmp_path):
+    """A conflicting duplicate whose event time falls in the next window is
+    dropped: the turn is emitted once, in its first arrival's window."""
+    jan = 1704067200
+    first = Turn("c", 0, "user", "first", None, (jan + 100) * US)
+    retry = Turn("c", 0, "user", "retry", None, (jan + 3700) * US)
+    advance = [Turn("wm", i, "user", "w", None, (jan + 24 * 3600) * US) for i in range(BATCH - 1)]
+    restarts = [[[first], [retry], advance]]
+    got = _stream_emitted(spark, tmp_path, restarts)
+    assert got[["conv_id", "turn_idx", "window_start_s", "text"]].values.tolist() == [
+        ["c", 0, jan, "first"]
+    ]
+    assert_frame_equal(got, _first_arrivals(restarts))

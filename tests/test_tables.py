@@ -245,3 +245,34 @@ def test_merge_upsert_null_seq_keeps_target_no_duplicate(spark, provider):
     provider.merge_upsert(src2, "t5n2", keys=["conv_id", "turn_idx"], seq_col="seq")
     row = provider.read("t5n2").filter("conv_id='c000' and turn_idx=0").collect()
     assert len(row) == 1 and row[0]["text"] == "text-0-0"
+
+
+def test_seq_merge_with_source_derived_from_target(spark, tmp_path):
+    """The correction batch is computed FROM a read of the target table —
+    the classic backfill shape. The seq-path COW overwrite truncates the
+    very files such a source's lazy plan would re-read, so merge_upsert
+    must sever the source lineage too; without that this test dies with
+    FAILED_READ_FILE or silently corrupts."""
+    tp = TableProvider(spark, str(tmp_path))
+    base = spark.createDataFrame(
+        [(1, "a", 10), (2, "b", 10), (3, "c", 10)], ["k", "v", "seq"]
+    )
+    tp.replace(base, "t")
+    # source derived from the target itself, NOT materialized by the caller
+    src = (
+        tp.read("t")
+        .filter(F.col("k") <= 2)
+        .withColumn("v", F.concat(F.col("v"), F.lit("-fixed")))
+        .withColumn("seq", F.col("seq") + 10)
+    )
+    tp.merge_upsert(src, "t", keys=["k"], seq_col="seq")
+    rows = {r["k"]: (r["v"], r["seq"]) for r in tp.read("t").collect()}
+    assert rows == {1: ("a-fixed", 20), 2: ("b-fixed", 20), 3: ("c", 10)}
+    # and replaying the identical (now-stale vs the table) correction is a
+    # no-op, not a duplicate-key insert
+    tp.merge_upsert(
+        spark.createDataFrame([(1, "stale", 15)], ["k", "v", "seq"]),
+        "t", keys=["k"], seq_col="seq",
+    )
+    rows = {r["k"]: (r["v"], r["seq"]) for r in tp.read("t").collect()}
+    assert rows[1] == ("a-fixed", 20) and len(rows) == 3
