@@ -1,1 +1,1 @@
-from .hashing import uuid5_udf, uuid5_col, hex_to_long  # noqa: F401
+from .hashing import uuid5_col, uuid5_sql, hex_to_long  # noqa: F401

@@ -6,15 +6,15 @@ runner retries overwrite the same destination
 (``pipeline/IngestionPipeline.java:226-233``, ``pipeline/BatchWriterFn.java:140-143``).
 We go one step stronger (as planned in SURVEY §2 G2): the batch id itself is
 ``uuid5(name + window + chunk_ordinal)``, so a full re-run — not just a bundle
-retry — lands on identical destinations. uuid5 = md5-free SHA-1 namespace UUID;
-computed in an Arrow pandas UDF (stdlib uuid over a pandas batch).
+retry — lands on identical destinations. uuid5 = SHA-1 namespace UUID,
+computed JVM-side from SQL text (``uuid5_sql``), bit-identical to the
+stdlib's ``uuid.uuid5(NAMESPACE, name)``.
 """
 
 from __future__ import annotations
 
 import uuid
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -22,31 +22,23 @@ from pyspark.sql import types as T
 NAMESPACE = uuid.UUID("6ba7b810-9dad-11d1-80b4-00c04fd430c8")  # uuid.NAMESPACE_DNS
 
 
-@F.pandas_udf(T.StringType())
-def uuid5_udf(name: pd.Series) -> pd.Series:
-    """Reference implementation (stdlib); used in tests to certify uuid5_col."""
-    return name.map(lambda s: str(uuid.uuid5(NAMESPACE, s)))
+def uuid5_sql(name: str) -> str:
+    """RFC-4122 v5 UUID of the SQL string expression ``name``, as SQL text:
+    sha1 and string ops only, so the batch-id path stays inside whole-stage
+    codegen with no Python in the plan. Version nibble := 5; variant nibble
+    := (x & 3) | 8."""
+    h = f"sha1(concat(unhex('{NAMESPACE.hex}'), encode({name}, 'UTF-8')))"
+    variant = f"lower(conv(CAST(CAST(conv(substring({h}, 17, 1), 16, 10) AS INT) % 4 + 8 AS STRING), 10, 16))"
+    return (
+        f"concat_ws('-', substring({h}, 1, 8), substring({h}, 9, 4),"
+        f" concat('5', substring({h}, 14, 3)), concat({variant}, substring({h}, 18, 3)),"
+        f" substring({h}, 21, 12))"
+    )
 
 
-def uuid5_col(name: Column) -> Column:
-    """RFC-4122 v5 UUID computed ENTIRELY JVM-side (sha1 + string ops) —
-    bit-identical to ``uuid.uuid5(NAMESPACE, name)`` but with no Python in
-    the plan (keeps the batch-id path inside whole-stage codegen; at 10^12
-    rows the Arrow round-trip this replaces was the hot path's only
-    non-JVM stage). Version nibble := 5; variant nibble := (x & 3) | 8."""
-    h = F.sha1(F.concat(F.unhex(F.lit(NAMESPACE.hex)), F.encode(name, "UTF-8")))
-    variant = F.conv(F.substring(h, 17, 1), 16, 10).cast(T.IntegerType())
-    variant_patched = F.lower(
-        F.conv(((variant % 4) + 8).cast(T.StringType()), 10, 16)
-    )
-    return F.concat_ws(
-        "-",
-        F.substring(h, 1, 8),
-        F.substring(h, 9, 4),
-        F.concat(F.lit("5"), F.substring(h, 14, 3)),
-        F.concat(variant_patched, F.substring(h, 18, 3)),
-        F.substring(h, 21, 12),
-    )
+def uuid5_col(name: str) -> Column:
+    """``uuid5_sql`` of the SQL string expression ``name`` as a Column."""
+    return F.expr(uuid5_sql(name))
 
 
 def hex_to_long(col: Column, n_hex: int = 15) -> Column:

@@ -24,10 +24,11 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import sql_function
 from .schema import LATEST_SCHEMA_VERSION, MIN_SCHEMA_VERSION, NUMBER_OF_SERVERS, PRIME
 
 _B64_RE = r"^[A-Za-z0-9+/]*={0,2}$"
@@ -84,46 +85,60 @@ PLAIN_CHECKS = (
 )
 
 
-def _checks(df: DataFrame) -> tuple[tuple[str, str], ...]:
-    return PAYLOAD_CHECKS if "encrypted_shares" in df.columns else PLAIN_CHECKS
+def _checks(columns: list[str]) -> tuple[tuple[str, str], ...]:
+    """The checks of a frame with ``columns``: Prio documents when it has
+    ``encrypted_shares``, else plain turns."""
+    return PAYLOAD_CHECKS if "encrypted_shares" in columns else PLAIN_CHECKS
+
+
+def invalid_reason_sql(columns: list[str]) -> str:
+    """The check chain of a frame with ``columns`` as one SQL when-cascade
+    (null ⇒ valid)."""
+    cases = " ".join(f"WHEN {cond} THEN '{r}'" for r, cond in _checks(columns))
+    return f"CASE {cases} END"
 
 
 def invalid_reason_col(df: DataFrame) -> Column:
-    """The check chain of ``df``'s shape as one when-cascade (null ⇒ valid)."""
-    cases = " ".join(f"WHEN {cond} THEN '{reason}'" for reason, cond in _checks(df))
-    return F.expr(f"CASE {cases} END")
+    """``invalid_reason_sql`` of ``df``'s shape as a Column."""
+    return F.expr(invalid_reason_sql(df.columns))
 
 
 def validate_turns(df: DataFrame) -> DataFrame:
     """Annotate with ``invalid_reason`` (null ⇒ valid). Pure, narrow, codegen'd."""
-    return df.withColumn("invalid_reason", invalid_reason_col(df))
+    return df.selectExpr("*", f"{invalid_reason_sql(df.columns)} AS invalid_reason")
+
+
+def observe_invalid(annotated: DataFrame, observation: Observation) -> DataFrame:
+    """``annotated`` (see ``validate_turns``) with its invalid rows counted
+    per reason into ``observation`` — one ``count_if`` per reason of the
+    cascade — as it is scanned, so a job that consumes it gets the counters
+    without a second pass over the input."""
+    return annotated.observe(
+        observation,
+        *[F.expr(f"count_if(invalid_reason = '{r}') AS {r}") for r, _ in _checks(annotated.columns)],
+    )
+
+
+def invalid_counters(annotated: DataFrame) -> DataFrame:
+    """Per-class drop counts ``(invalid_reason, n)`` of ``annotated`` — the
+    counter analog of model/DataShare.java:46-55."""
+    return (
+        annotated.filter("invalid_reason IS NOT NULL")
+        .groupBy("invalid_reason")
+        .agg(F.count("*").alias("n"))
+    )
 
 
 def split_valid(
     df: DataFrame, observation: Observation | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """(valid rows sans marker, per-class drop counts) — the counter analog of
-    model/DataShare.java:46-55.
-
-    With ``observation``, the same counts also ride the scan as one
-    ``count_if`` per reason of the cascade, so a job that consumes ``valid``
-    gets them without a second pass over the input."""
+    """(valid rows sans marker, per-class drop counts); with
+    ``observation``, the counts also ride the scan (``observe_invalid``)."""
     annotated = validate_turns(df)
     if observation is not None:
-        annotated = annotated.observe(
-            observation,
-            *[
-                F.expr(f"count_if(invalid_reason = '{r}') AS {r}")
-                for r, _ in _checks(df)
-            ],
-        )
-    valid = annotated.filter(F.col("invalid_reason").isNull()).drop("invalid_reason")
-    counters = (
-        annotated.filter(F.col("invalid_reason").isNotNull())
-        .groupBy("invalid_reason")
-        .agg(F.count("*").alias("n"))
-    )
-    return valid, counters
+        annotated = observe_invalid(annotated, observation)
+    valid = annotated.filter("invalid_reason IS NULL").drop("invalid_reason")
+    return valid, invalid_counters(annotated)
 
 
 @F.pandas_udf(T.LongType())
@@ -167,6 +182,12 @@ def _rpit_udf(uuid: pd.Series, bins: pd.Series) -> pd.Series:
         pending[idx[ok]] = False
         attempt += 1
     return pd.Series(out.astype(np.int64))
+
+
+def rpit_sql(spark: SparkSession, uuid: str, bins: str) -> str:
+    """``_rpit_udf`` of the SQL expressions ``uuid`` and ``bins`` as SQL
+    text, through a temporary function of ``spark``."""
+    return f"{sql_function(spark, '_enpa_rpit', _rpit_udf)}({uuid}, {bins})"
 
 
 def with_rpit(

@@ -6,9 +6,15 @@ Reference: ``AbstractDeviceAttestation`` is a whole-collection
 ``attestation/AbstractDeviceAttestation.java:32-43``); deliberately not a
 per-row predicate so implementations may compute distributions.
 
-Spark shape: a registry of ``DataFrame → DataFrame`` callables. The default
-implementation checks the signature/cert surface is present and well-formed —
-the sandbox stand-in for cryptographic attestation (no device keys here).
+Spark shape: a registry of relation transforms in SQL. A stage gets the
+session, the relation it attests (a name, or an aliased subquery, to select
+FROM) and that relation's column names, and returns a query over the
+relation with the same columns —
+filters, aggregates, joins or window functions alike — registering any
+function it calls. The batch core splices the query into its one SQL
+statement. The default implementation checks the signature/cert surface is
+present and well-formed — the sandbox stand-in for cryptographic
+attestation (no device keys here).
 """
 
 from __future__ import annotations
@@ -16,10 +22,13 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-AttestationStage = Callable[[DataFrame], DataFrame]
+from ..session import sql_function
+
+AttestationStage = Callable[[SparkSession, str, list[str]], str]
 
 _REGISTRY: dict[str, AttestationStage] = {}
 
@@ -34,15 +43,13 @@ def get_attestation(name: str | None) -> AttestationStage | None:
     return _REGISTRY[name]
 
 
-def signature_presence_attestation(df: DataFrame) -> DataFrame:
+def signature_presence_attestation(spark: SparkSession, relation: str, columns: list[str]) -> str:
     """Keep rows with a non-empty signature and ≥1 certificate."""
-    if "signature" not in df.columns:
-        return df
-    return df.filter(
-        F.col("signature").isNotNull()
-        & (F.length("signature") > 0)
-        & F.col("cert_chain").isNotNull()
-        & (F.size("cert_chain") > 0)
+    if "signature" not in columns:
+        return f"SELECT * FROM {relation}"
+    return (
+        f"SELECT * FROM {relation} WHERE signature IS NOT NULL AND length(signature) > 0"
+        " AND cert_chain IS NOT NULL AND size(cert_chain) > 0"
     )
 
 
@@ -67,73 +74,68 @@ def canonical_message(conv_id: str, turn_idx: int, payloads: list[str]) -> bytes
     return ("#".join([conv_id, str(int(turn_idx))]) + "|" + "|".join(payloads)).encode()
 
 
-def signature_verify_attestation(df: DataFrame) -> DataFrame:
-    """Keep only rows whose ECDSA P-256 signature verifies over the canonical
+@F.pandas_udf(T.BooleanType())
+def _signature_verifies(
+    sig: pd.Series,
+    chain: pd.Series,
+    conv: pd.Series,
+    idx: pd.Series,
+    shares: pd.Series,
+) -> pd.Series:
+    """Per row: the ECDSA P-256 signature verifies over the canonical
     message under the leaf public key in cert_chain[0]."""
     import base64
 
-    from pyspark.sql import types as T
+    try:
+        from cryptography.exceptions import InvalidSignature
+        from cryptography.hazmat.primitives import hashes
+        from cryptography.hazmat.primitives.asymmetric import ec
+        from cryptography.hazmat.primitives.serialization import (
+            load_der_public_key,
+        )
+    except ImportError as e:  # pragma: no cover - env without cryptography
+        raise NotImplementedError(
+            "signature_verify attestation requires the 'cryptography' "
+            "package on the executors"
+        ) from e
 
-    @F.pandas_udf(T.BooleanType())
-    def _ok(
-        sig: pd.Series,
-        chain: pd.Series,
-        conv: pd.Series,
-        idx: pd.Series,
-        shares: pd.Series,
-    ) -> pd.Series:
+    pubkey_cache: dict[bytes, object] = {}
+    out = []
+    for s, ch, c, i, sh in zip(sig, chain, conv, idx, shares):
         try:
-            from cryptography.exceptions import InvalidSignature
-            from cryptography.hazmat.primitives import hashes
-            from cryptography.hazmat.primitives.asymmetric import ec
-            from cryptography.hazmat.primitives.serialization import (
-                load_der_public_key,
-            )
-        except ImportError as e:  # pragma: no cover - env without cryptography
-            raise NotImplementedError(
-                "signature_verify attestation requires the 'cryptography' "
-                "package on the executors"
-            ) from e
-
-        pubkey_cache: dict[bytes, object] = {}
-        out = []
-        for s, ch, c, i, sh in zip(sig, chain, conv, idx, shares):
-            try:
-                if s is None or ch is None or len(ch) == 0 or sh is None:
-                    out.append(False)
-                    continue
-                der_pub = base64.b64decode(ch[0])
-                pub = pubkey_cache.get(der_pub)
-                if pub is None:
-                    pub = pubkey_cache[der_pub] = load_der_public_key(der_pub)
-                msg = canonical_message(c, i, [x["payload"] for x in sh])
-                pub.verify(
-                    base64.b64decode(s), msg, ec.ECDSA(hashes.SHA256())
-                )
-                out.append(True)
-            except (InvalidSignature, ValueError, TypeError, KeyError):
+            if s is None or ch is None or len(ch) == 0 or sh is None:
                 out.append(False)
-        return pd.Series(out)
+                continue
+            der_pub = base64.b64decode(ch[0])
+            pub = pubkey_cache.get(der_pub)
+            if pub is None:
+                pub = pubkey_cache[der_pub] = load_der_public_key(der_pub)
+            msg = canonical_message(c, i, [x["payload"] for x in sh])
+            pub.verify(base64.b64decode(s), msg, ec.ECDSA(hashes.SHA256()))
+            out.append(True)
+        except (InvalidSignature, ValueError, TypeError, KeyError):
+            out.append(False)
+    return pd.Series(out)
 
+
+def signature_verify_attestation(spark: SparkSession, relation: str, columns: list[str]) -> str:
+    """Keep only rows whose ECDSA P-256 signature verifies over the canonical
+    message under the leaf public key in cert_chain[0]."""
     # Fail CLOSED: an explicitly requested cryptographic attestation over a
     # frame that cannot carry a signature must be an error, not a silent
     # pass-through (the presence stand-in stays lenient; this one must not).
     required = ["signature", "cert_chain", "encrypted_shares"]
-    missing = [c for c in required if c not in df.columns]
+    missing = [c for c in required if c not in columns]
     if missing:
         raise ValueError(
             "signature_verify attestation requires columns "
             f"{required}; input is missing {missing} — refusing to fail "
             "open (every row would pass unverified)"
         )
-    return df.filter(
-        _ok(
-            F.col("signature"),
-            F.col("cert_chain"),
-            F.col("conv_id"),
-            F.col("turn_idx"),
-            F.col("encrypted_shares"),
-        )
+    verifies = sql_function(spark, "_enpa_signature_verifies", _signature_verifies)
+    return (
+        f"SELECT * FROM {relation} WHERE {verifies}("
+        "signature, cert_chain, conv_id, turn_idx, encrypted_shares)"
     )
 
 

@@ -29,17 +29,42 @@ window-filtered, so they differ only in batch membership:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import uuid5_col
-from .dedup import dedup_turns_deterministic
+from ..functions.hashing import uuid5_sql
+from .dedup import dedup_turns_deterministic, quote
 from .window_filter import window_filter
 
+# separates the chunk key's parts in a batch id's name
+_KEY_SEP = "'\\u001F'"
 
-def _batch_uuid(key_expr, window_start_s: int, ordinal_col):
-    name = F.concat_ws("|", key_expr, F.lit(str(window_start_s)), ordinal_col.cast("string"))
-    return uuid5_col(name)  # JVM-side uuid5 — no Python in the hot path
+
+def exact_ordinal_sql(key: list[str], order: list[str], batch_size: str | int) -> str:
+    """Exact chunking as SQL text: a row's ``floor((rn - 1) / batch_size)``
+    in its key's ``order`` (SQL expressions)."""
+    rank = f"row_number() OVER (PARTITION BY {', '.join(key)} ORDER BY {', '.join(order)})"
+    return f"CAST(floor(({rank} - 1) / {batch_size}) AS INT)"
+
+
+def batch_count_sql(batch_size: str | int) -> str:
+    """Scalable chunking's per-key aggregate: the key's number of batches."""
+    return f"CAST(ceil(count(*) / {batch_size}) AS INT)"
+
+
+def hashed_ordinal_sql(salt: str, n_batches: str) -> str:
+    """Scalable chunking's stateless ordinal of a row in ``n_batches``."""
+    return f"CAST(pmod(xxhash64({salt}), {n_batches}) AS INT)"
+
+
+def batch_id_sql(key: list[str], window_start_s: str | int, ordinal: str) -> str:
+    """``uuid5(key|window_start|ordinal)`` as SQL text, the key's parts
+    (SQL expressions) as strings joined by U+001F."""
+    parts = ", ".join(f"CAST({k} AS STRING)" for k in key)
+    return uuid5_sql(
+        f"concat_ws('|', concat_ws({_KEY_SEP}, {parts}),"
+        f" CAST({window_start_s} AS STRING), CAST({ordinal} AS STRING))"
+    )
 
 
 def assign_batches(
@@ -53,17 +78,11 @@ def assign_batches(
 
     Adds ``batch_ordinal`` (int) and deterministic ``batch_id`` (uuid5).
     """
-    key_cols = key_cols or ["conv_id"]
-    order_cols = order_cols or ["turn_idx"]
-    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c) for c in order_cols])
-    out = df.withColumn(
-        "batch_ordinal",
-        F.floor((F.row_number().over(w) - 1) / batch_size).cast("int"),
-    )
-    key_expr = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols])
-    return out.withColumn(
-        "batch_id", _batch_uuid(key_expr, window_start_s, F.col("batch_ordinal"))
-    )
+    key = [quote(c) for c in key_cols or ["conv_id"]]
+    order = [quote(c) for c in order_cols or ["turn_idx"]]
+    return df.selectExpr(
+        "*", f"{exact_ordinal_sql(key, order, batch_size)} AS batch_ordinal"
+    ).selectExpr("*", f"{batch_id_sql(key, window_start_s, 'batch_ordinal')} AS batch_id")
 
 
 def shuffle_by(df: DataFrame, *cols: str) -> DataFrame:
@@ -95,8 +114,9 @@ def dedup_window_chunk(
     which only ever extend the dedup keys), so Catalyst adds no second
     exchange. Dedup is keyed on the dedup keys, NOT the extended chunk key:
     duplicate turns collapse to one row even when their payload metadata
-    differs. ``plans/ingestion.py::_packets`` runs the same chain with its
-    attestation stage between the window filter and chunking."""
+    differs. ``plans/ingestion.py::_core_sql`` builds the same chain from
+    the same SQL fragments, its attestation stage between the window
+    filter and chunking."""
     key_cols = key_cols or ["conv_id"]
     dedup_key_cols = dedup_key_cols or key_cols
     order_cols = order_cols or ["turn_idx"]
@@ -124,17 +144,18 @@ def assign_batches_scalable(
     skew handling splits the hot key's shuffle partitions."""
     key_cols = key_cols or ["conv_id"]
     counts = df.groupBy(*key_cols).agg(
-        F.ceil(F.count("*") / batch_size).cast("int").alias("_n_batches")
+        F.expr(f"{batch_count_sql(batch_size)} AS _n_batches")
     )
     # No broadcast hint: `counts` has one row PER DISTINCT KEY, which is
     # unbounded (a forced broadcast OOMs the driver at 10^9+ conversations).
     # AQE broadcasts it at runtime when it is actually small, and its
     # skew-join splitting handles the hot key on the SMJ path otherwise.
-    out = df.join(counts, key_cols).withColumn(
-        "batch_ordinal",
-        F.pmod(F.xxhash64(F.col(salt_col)), F.col("_n_batches")).cast("int"),
-    ).drop("_n_batches")
-    key_expr = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols])
-    return out.withColumn(
-        "batch_id", _batch_uuid(key_expr, window_start_s, F.col("batch_ordinal"))
+    key = [quote(c) for c in key_cols]
+    return (
+        df.join(counts, key_cols)
+        .selectExpr(
+            "*", f"{hashed_ordinal_sql(quote(salt_col), '_n_batches')} AS batch_ordinal"
+        )
+        .drop("_n_batches")
+        .selectExpr("*", f"{batch_id_sql(key, window_start_s, 'batch_ordinal')} AS batch_id")
     )

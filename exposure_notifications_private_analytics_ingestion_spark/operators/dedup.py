@@ -11,9 +11,10 @@ expensive validate/decode stage so duplicates never pay the pandas-UDF cost
 
 The batch winner rule is defined here, once: among rows sharing a key, the
 one whose remaining columns are smallest, compared in column order with
-NULL first (``row_number() over (partition by key order by rest)``). It is
-total up to fully identical rows, so a replay or a retry keeps the same
-bytes, and every batch path of ``plans/ingestion.py`` uses it. The window
+NULL first (``dedup_rank_sql``: ``row_number() over (partition by key
+order by rest)``). It is total up to fully identical rows, so a replay or a
+retry keeps the same bytes, and every batch path of ``plans/ingestion.py``
+uses it. The window
 needs the rows clustered by the key; any partitioning on a subset of the key
 serves, so a caller that chunks by an extension of the key can exchange once
 for both.
@@ -21,8 +22,7 @@ for both.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 DEDUP_KEY = ["conv_id", "turn_idx"]
 
@@ -33,15 +33,26 @@ def dedup_turns(df: DataFrame, key: list[str] | None = None) -> DataFrame:
     return df.dropDuplicates(key or DEDUP_KEY)
 
 
+def quote(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def dedup_rank_sql(columns: list[str], key: list[str]) -> str:
+    """The winner rule as SQL text: a row's rank among the rows sharing
+    ``key``, ordered by its other ``columns`` in column order, NULL first;
+    rank 1 wins."""
+    rest = [c for c in columns if c not in key]
+    # with no other column, rows sharing a key are identical
+    order = ", ".join(quote(c) for c in rest or key)
+    return (
+        f"row_number() OVER (PARTITION BY {', '.join(quote(c) for c in key)}"
+        f" ORDER BY {order})"
+    )
+
+
 def dedup_turns_deterministic(df: DataFrame, key: list[str] | None = None) -> DataFrame:
     """Deterministic-winner dedup: per key, the row whose other columns are
     smallest in column order, NULL first (the module's winner rule)."""
-    key = key or DEDUP_KEY
-    rest = [c for c in df.columns if c not in key]
-    # with no other column, rows sharing a key are identical
-    w = Window.partitionBy(*key).orderBy(*(rest or key))
-    return (
-        df.withColumn("_rn_dedup", F.row_number().over(w))
-        .filter(F.col("_rn_dedup") == 1)
-        .drop("_rn_dedup")
-    )
+    rank = dedup_rank_sql(df.columns, key or DEDUP_KEY)
+    return df.selectExpr("*", f"{rank} AS _rn_dedup").filter("_rn_dedup = 1").drop("_rn_dedup")

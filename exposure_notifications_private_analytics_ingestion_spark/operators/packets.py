@@ -15,15 +15,55 @@ shuffle, fully codegen'd (Generate node). uuid = ``conv_id#turn_idx``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 DESTINATIONS = ["pha", "facilitator"]
 
+# the packet uuid of a turn
+TURN_UUID_SQL = "concat_ws('#', conv_id, CAST(turn_idx AS STRING))"
+# the batch's Prio metadata a packet carries to the header stage — the
+# reference derives header fields from DataShareMetadata, never from
+# constants (pipeline/BatchWriterFn.java:152-176)
+_PRIO_FIELDS = (("bins", "INT"), ("epsilon", "DOUBLE"), ("hamming_weight", "INT"), ("prime", "BIGINT"))
 
-def turn_uuid() -> F.Column:
-    return F.concat_ws("#", F.col("conv_id"), F.col("turn_idx").cast("string"))
+
+def turn_uuid() -> Column:
+    return F.expr(TURN_UUID_SQL)
+
+
+def packet_generator_sql(columns: list[str], payload_col: str = "encrypted_shares") -> str:
+    """The fan-out of a turn into its destinations' rows, as a SQL
+    generator yielding ``(_pos, _share)``: the shares array when the rows
+    carry ``payload_col``, else positions 0 and 1."""
+    shares = payload_col if payload_col in columns else "array(0, 1)"
+    return f"posexplode({shares})"
+
+
+def packet_columns_sql(columns: list[str], payload_col: str = "encrypted_shares") -> list[str]:
+    """The packet row's columns as SQL text over a fanned-out row (see
+    ``packet_generator_sql``) of a frame with ``columns``."""
+    payload = (
+        "unbase64(_share.payload)"
+        if payload_col in columns
+        else "encode(text, 'UTF-8')"
+    )
+    cols = [
+        "batch_id",
+        f"CASE WHEN _pos = 0 THEN '{DESTINATIONS[0]}' ELSE '{DESTINATIONS[1]}' END AS destination",
+        f"{TURN_UUID_SQL} AS uuid",
+        "r_pit" if "r_pit" in columns else "CAST(NULL AS BIGINT) AS r_pit",
+        f"{payload} AS encrypted_payload",
+        "CAST(NULL AS STRING) AS encryption_key_id",
+        "CAST(NULL AS STRING) AS version_configuration",
+        "CAST(NULL AS BINARY) AS device_nonce",
+        "conv_id",
+        "turn_idx",
+        "ts",
+    ]
+    if "prio_params" in columns:
+        cols += [f"CAST(prio_params.{f} AS {t}) AS {f}" for f, t in _PRIO_FIELDS]
+    return cols
 
 
 def split_packets(df: DataFrame, payload_col: str = "encrypted_shares") -> DataFrame:
@@ -32,40 +72,7 @@ def split_packets(df: DataFrame, payload_col: str = "encrypted_shares") -> DataF
     If ``payload_col`` is absent (plain transcript turns), both forks carry
     the turn text bytes — the graft's per-turn parity column.
     """
-    if payload_col in df.columns:
-        exploded = df.select(
-            "*", F.posexplode(payload_col).alias("_pos", "_share")
-        )
-        payload = F.unbase64(F.col("_share.payload"))
-    else:
-        exploded = df.select(
-            "*",
-            F.posexplode(F.array(F.lit(0), F.lit(1))).alias("_pos", "_ignored"),
-        )
-        payload = F.encode(F.col("text"), "UTF-8")
-
-    dest = F.when(F.col("_pos") == 0, F.lit("pha")).otherwise(F.lit("facilitator"))
-    cols = [
-        F.col("batch_id"),
-        dest.alias("destination"),
-        turn_uuid().alias("uuid"),
-        (F.col("r_pit") if "r_pit" in df.columns else F.lit(None).cast("long")).alias("r_pit"),
-        payload.alias("encrypted_payload"),
-        F.lit(None).cast(T.StringType()).alias("encryption_key_id"),
-        F.lit(None).cast(T.StringType()).alias("version_configuration"),
-        F.lit(None).cast(T.BinaryType()).alias("device_nonce"),
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        F.col("ts"),
-    ]
-    if "prio_params" in df.columns:
-        # carry the batch's Prio metadata to the header stage — the reference
-        # derives header fields from DataShareMetadata, never from constants
-        # (pipeline/BatchWriterFn.java:152-176)
-        cols += [
-            F.col("prio_params.bins").cast("int").alias("bins"),
-            F.col("prio_params.epsilon").cast("double").alias("epsilon"),
-            F.col("prio_params.hamming_weight").cast("int").alias("hamming_weight"),
-            F.col("prio_params.prime").cast("long").alias("prime"),
-        ]
-    return exploded.select(*cols)
+    gen = packet_generator_sql(df.columns, payload_col)
+    return df.selectExpr("*", f"{gen} AS (_pos, _share)").selectExpr(
+        *packet_columns_sql(df.columns, payload_col)
+    )

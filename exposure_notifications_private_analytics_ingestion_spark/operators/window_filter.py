@@ -15,7 +15,6 @@ granularity to match ``DateFilterFn.java:57-58`` exactly.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def calculate_window_start(start_s: int | None, duration_s: int, now_s: int) -> int:
@@ -25,19 +24,19 @@ def calculate_window_start(start_s: int | None, duration_s: int, now_s: int) -> 
     return (now_s // duration_s - 1) * duration_s
 
 
-def ts_ms_col(ts_col: str = "ts"):
-    """Exact epoch-ms (integer division on unix micros — never float math,
-    which is off-by-one at µs-000 boundaries)."""
-    return F.expr(f"unix_micros({ts_col}) div 1000")
+def window_predicate_sql(lo_ms: str | int, hi_ms: str | int, ts_col: str = "ts") -> str:
+    """``ts_ms ∈ [lo_ms, hi_ms)`` and a non-null ``ts``, as SQL text; the
+    bounds are SQL operands (literals or parameter markers). ts_ms is exact
+    epoch-ms — integer division on unix micros, never float math, which is
+    off-by-one at µs-000 boundaries."""
+    ts_ms = f"unix_micros({ts_col}) div 1000"
+    return f"{ts_col} IS NOT NULL AND {ts_ms} >= {lo_ms} AND {ts_ms} < {hi_ms}"
 
 
 def window_filter(
     df: DataFrame, start_s: int, duration_s: int, ts_col: str = "ts"
 ) -> DataFrame:
     """Keep rows with ts_ms in [start_s*1000, (start_s+duration_s)*1000)."""
-    ts_ms = ts_ms_col(ts_col)
-    lo = start_s * 1000
-    hi = (start_s + duration_s) * 1000
     return df.filter(
-        F.col(ts_col).isNotNull() & (ts_ms >= F.lit(lo)) & (ts_ms < F.lit(hi))
+        window_predicate_sql(start_s * 1000, (start_s + duration_s) * 1000, ts_col)
     )

@@ -11,24 +11,31 @@ tests drive directly (``IngestionPipelineTest.java:50-109``): pure
 ``DataFrame → (packets, headers, counters)``, no I/O. ``run_ingestion`` wraps
 the same core with the scan and one writer pass.
 
-Plan shape at scale: the core shuffles once by the dedup key, for dedup
-and exact chunking alike; validation, window filter, attestation, r_pit and
-the packet fan-out ride that exchange (the hot-key chunker adds its own),
-and Catalyst pushes the window predicate into the scan (hour-partition
-pruning). The invalid-row counters are an ``Observation`` on the validated
-scan. ``run_ingestion`` then runs ONE action (``write_partition``), which
-rides the same exchange — a batch id is a function of the chunk key, so
-each batch sits in one partition: a ``mapInArrow`` writer sorts each task's
-packets by ``(batch_id, destination, uuid)`` and handles each
-(batch, destination) group in turn — packet rows, header with
-``packet_file_digest`` (``build_headers``' definition), signature, and the
-``.batch.avro`` container with its SHA-256 — the per-batch step of the
-reference's ``BatchWriterFn.java:104-239``. Tasks stream every leg into a
-per-run staging tree, and the driver swaps it into place only after the
-action succeeded. ``build_headers`` / ``build_signatures`` /
-``sign_headers`` remain the DataFrame definitions of the same values. The
-streaming epoch sink (``streaming/sink.py``) writes each epoch through the
-same ``write_partition``.
+The core is ONE SQL statement (``_core_sql``), generated from the options
+for every option set — Prio or plain, attested or not, exact or hot-key
+chunking — out of the operators' own SQL fragments (``dedup_rank_sql``,
+``window_predicate_sql``, ``exact_ordinal_sql``, ``batch_id_sql``,
+``packet_columns_sql``, ...), with the window bounds, the batch size and
+the window start as named parameters. So a window's plan costs the driver a
+few dozen py4j calls, not one per Column expression. Plan shape at scale:
+the core shuffles once by the dedup key, for dedup and exact chunking
+alike; window filter, attestation, r_pit and the packet fan-out ride that
+exchange (the hot-key chunker adds its own). The validation cascade and
+the invalid-row counters — an ``Observation`` — sit on the scan below it.
+``run_ingestion`` then runs ONE action (``write_partition``), which rides
+the same exchange — a batch id is a function of the chunk key, so each
+batch sits in one partition: a ``mapInArrow`` writer sorts each task's
+packets by ``(batch_id, destination, uuid)``, appends each Arrow batch to
+the packet leg, and handles each (batch, destination) group in turn —
+header with ``packet_file_digest`` (``build_headers``' definition),
+signature, and the ``.batch.avro`` container with its SHA-256 — the
+per-batch step of the reference's ``BatchWriterFn.java:104-239``. Tasks
+stream every leg into a per-run staging tree, each container as one flat
+file, and the driver moves it all into place only after the action
+succeeded. ``build_headers`` / ``build_signatures`` / ``sign_headers``
+remain the DataFrame definitions of the same values. The streaming epoch
+sink (``streaming/sink.py``) writes each epoch through the same
+``write_partition``.
 """
 
 from __future__ import annotations
@@ -69,12 +76,28 @@ from ..functions.signing import (
     digest_signer,
     public_key_der_b64,
 )
-from ..model.validate import split_valid, with_rpit
+from ..model.validate import (
+    invalid_counters,
+    observe_invalid,
+    rpit_sql,
+    validate_turns,
+)
 from ..operators.attestation import get_attestation
-from ..operators.batching import assign_batches, assign_batches_scalable, shuffle_by
-from ..operators.dedup import dedup_turns_deterministic
-from ..operators.packets import DESTINATIONS, split_packets, turn_uuid
-from ..operators.window_filter import window_filter
+from ..operators.batching import (
+    batch_count_sql,
+    batch_id_sql,
+    exact_ordinal_sql,
+    hashed_ordinal_sql,
+    shuffle_by,
+)
+from ..operators.dedup import dedup_rank_sql, quote
+from ..operators.packets import (
+    DESTINATIONS,
+    TURN_UUID_SQL,
+    packet_columns_sql,
+    packet_generator_sql,
+)
+from ..operators.window_filter import window_predicate_sql
 from ..model.schema import HEADERS_SCHEMA, NUMBER_OF_SERVERS, PRIME
 
 
@@ -107,24 +130,23 @@ def process_turns(df: DataFrame, opts: IngestionOptions) -> tuple[DataFrame, Dat
 
     Returns (packets, headers, invalid_counters).
     """
-    valid, counters = split_valid(df)
-    packets = _packets(valid, opts)
-    return packets, build_headers(packets, opts), counters
+    annotated = validate_turns(df)
+    packets = _packets(annotated, opts)
+    return packets, build_headers(packets, opts), invalid_counters(annotated)
 
 
-def _packets(valid: DataFrame, opts: IngestionOptions) -> DataFrame:
-    """r_pit → dedup → window → (attest) → batch → split, over validated
-    rows."""
-    has_payload = "encrypted_shares" in valid.columns
-    stage = get_attestation(opts.attestation)
+# the Prio fields that extend the chunk key, in key order
+_PRIO_KEY = ("bins", "epsilon", "hamming_weight", "prime")
 
-    # One chain for every option set: dedup → window → [attestation] →
-    # chunk, with the winner rule of operators/dedup.py. Attestation sits
-    # between the window filter and chunking (reference op order F1→F2→K1,
-    # IngestionPipeline.java:61-89); scalable_chunking only picks the chunker.
-    # Dedup is keyed on (key_cols, turn_idx) in ALL paths — duplicate turns
-    # collapse to one row regardless of payload differences, matching the
-    # reference's Distinct-by-path (IngestionPipeline.java:110-119).
+
+def _core_sql(spark: SparkSession, source: str, columns: list[str], opts: IngestionOptions) -> str:
+    """r_pit → dedup → window → (attest) → batch → split over the valid rows
+    of the relation ``source`` (``validate_turns``' columns), as one SQL
+    statement. Its parameters: ``:lo_ms`` and ``:hi_ms`` (the window),
+    ``:batch_size`` and ``:window_start``."""
+    has_payload = "encrypted_shares" in columns
+    valid = [c for c in columns if c != "invalid_reason"]
+    select = "* EXCEPT (invalid_reason)"
     if has_payload:
         # V2 — rPit generated once per valid share BEFORE the fork, so both
         # destinations carry the same value (DataShare.java:190-205; the
@@ -134,46 +156,88 @@ def _packets(valid: DataFrame, opts: IngestionOptions) -> DataFrame:
         # exchange from the row's own uuid and bins, so the winner keeps its
         # value (as the last column it never decides the winner), and the
         # UDF's Python worker is not a second one beside the writer's.
-        valid = with_rpit(valid, turn_uuid(), F.col("prio_params.bins"))
-    dedup_keys = list(opts.key_cols)
-    if opts.scalable_chunking:
-        # hot keys: dedup exchanges on the full (key, turn_idx), so no
-        # conversation is sorted whole, and the chunker routes by hash
-        rows, chunk = valid, assign_batches_scalable
-    else:
-        # one exchange on the dedup keys serves dedup and exact chunking,
-        # whose keys extend them; a narrow stage and the writer ride it too:
-        # a batch id is a function of the chunk key, so each batch sits in
-        # one partition
-        rows, chunk = shuffle_by(valid, *dedup_keys), assign_batches
-    rows = window_filter(
-        dedup_turns_deterministic(rows, dedup_keys + ["turn_idx"]),
-        opts.window_start_s,
-        opts.duration_s,
+        select += f", {rpit_sql(spark, TURN_UUID_SQL, 'prio_params.bins')} AS r_pit"
+        valid.append("r_pit")
+    n_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    dedup_keys = ", ".join(quote(k) for k in opts.key_cols)
+    # One chain for every option set: dedup → window → [attestation] →
+    # chunk, with the winner rule of operators/dedup.py. Attestation sits
+    # between the window filter and chunking (reference op order F1→F2→K1,
+    # IngestionPipeline.java:61-89); scalable_chunking only picks the chunker.
+    # Dedup is keyed on (key_cols, turn_idx) in ALL paths — duplicate turns
+    # collapse to one row regardless of payload differences, matching the
+    # reference's Distinct-by-path (IngestionPipeline.java:110-119). On the
+    # exact path one exchange on the dedup keys serves dedup and exact
+    # chunking, whose keys extend them; a narrow stage and the writer ride
+    # it too: a batch id is a function of the chunk key, so each batch sits
+    # in one partition. On the hot-key path dedup exchanges on the full
+    # (key, turn_idx), so no conversation is sorted whole, and the chunker
+    # routes by hash.
+    shuffle = "" if opts.scalable_chunking else f"/*+ REPARTITION({n_parts}, {dedup_keys}) */ "
+    # each step is a subquery of the next: as CTEs, the same steps cost the
+    # analyser and optimiser 50-100 ms more per warm window (InlineCTE alone
+    # ~30 ms; 4-core host, local[2])
+    rank = dedup_rank_sql(valid, list(opts.key_cols) + ["turn_idx"])
+    q = f"SELECT {shuffle}{select} FROM {source} WHERE invalid_reason IS NULL"
+    q = f"SELECT *, {rank} AS _rn FROM ({q})"
+    q = (
+        f"SELECT * EXCEPT (_rn) FROM ({q})"
+        f" WHERE _rn = 1 AND {window_predicate_sql(':lo_ms', ':hi_ms')}"
     )
+    stage = get_attestation(opts.attestation)
     if stage is not None:
-        rows = stage(rows)
-
+        q = stage(spark, f"({q}) windowed", valid)
     # K1 — the reference keys batches by the FULL stringified
     # DataShareMetadata (IngestionPipeline.java:78-88), so documents with
-    # different prio_params never share a batch; mirror that by extending the
-    # CHUNKING key with the prio fields. They are projected to TOP-LEVEL
-    # columns first (`_k_*`) because nested field names cannot serve as
-    # groupBy/USING-join keys (assign_batches_scalable's count-join would
-    # raise UNRESOLVED_USING_COLUMN_FOR_JOIN on 'prio_params.bins').
-    chunk_keys = list(opts.key_cols)
+    # different prio_params never share a batch: the chunk key extends the
+    # dedup keys by the Prio fields.
+    chunk_key = [quote(k) for k in opts.key_cols]
     if has_payload:
-        for f_name in ("bins", "epsilon", "hamming_weight", "prime"):
-            rows = rows.withColumn(f"_k_{f_name}", F.col(f"prio_params.{f_name}"))
-            chunk_keys.append(f"_k_{f_name}")
-    batched = chunk(rows, opts.batch_size, opts.window_start_s, key_cols=chunk_keys)
-    drop_helper = [c for c in batched.columns if c.startswith("_k_")]
-    if drop_helper:
-        batched = batched.drop(*drop_helper)
-    packets = split_packets(batched)
-    # the hash-routed chunker spreads each batch over partitions; the writer
-    # needs each batch whole in one
-    return shuffle_by(packets, "batch_id") if opts.scalable_chunking else packets
+        chunk_key += [f"prio_params.{f}" for f in _PRIO_KEY]
+    by_batch = ""
+    if opts.scalable_chunking:
+        keys = ", ".join(f"{k} AS _k{i}" for i, k in enumerate(chunk_key))
+        on = " AND ".join(f"a.{k} = c._k{i}" for i, k in enumerate(chunk_key))
+        counts = (
+            f"SELECT {keys}, {batch_count_sql(':batch_size')} AS _n_batches"
+            f" FROM ({q}) GROUP BY {', '.join(chunk_key)}"
+        )
+        q = (
+            f"SELECT a.*, {hashed_ordinal_sql('a.turn_idx', 'c._n_batches')} AS batch_ordinal"
+            f" FROM ({q}) a JOIN ({counts}) c ON {on}"
+        )
+        # the hash-routed chunker spreads each batch over partitions; the
+        # writer needs each batch whole in one
+        by_batch = f"/*+ REPARTITION({n_parts}, batch_id) */ "
+    else:
+        ordinal = exact_ordinal_sql(chunk_key, ["turn_idx"], ":batch_size")
+        q = f"SELECT *, {ordinal} AS batch_ordinal FROM ({q})"
+    batch_id = batch_id_sql(chunk_key, ":window_start", "batch_ordinal")
+    q = f"SELECT *, {batch_id} AS batch_id FROM ({q})"
+    batched = valid + ["batch_ordinal", "batch_id"]
+    q = f"SELECT *, {packet_generator_sql(batched)} AS (_pos, _share) FROM ({q})"
+    return f"SELECT {by_batch}{', '.join(packet_columns_sql(batched))} FROM ({q})"
+
+
+def _packets(annotated: DataFrame, opts: IngestionOptions) -> DataFrame:
+    """``_core_sql`` over ``annotated`` (``validate_turns``' output), bound
+    to the window of ``opts``."""
+    spark = annotated.sparkSession
+    view = f"_enpa_validated_{uuid.uuid4().hex}"
+    annotated.createOrReplaceTempView(view)
+    try:
+        # analysed here, so the view is no longer needed once this returns
+        return spark.sql(
+            _core_sql(spark, view, annotated.columns, opts),
+            args={
+                "lo_ms": opts.window_start_s * 1000,
+                "hi_ms": (opts.window_start_s + opts.duration_s) * 1000,
+                "batch_size": opts.batch_size,
+                "window_start": opts.window_start_s,
+            },
+        )
+    finally:
+        spark.catalog.dropTempView(view)
 
 
 # header Prio metadata of plain transcript batches (ENPA deployment values),
@@ -450,21 +514,26 @@ def _writer_pass(
 
     A batch split over tasks comes back in several results' ``batch_ids``,
     each task having written a partial header for it. Each task sorts its
-    rows by ``(batch_id, destination, uuid)`` and walks its
-    (batch, destination) groups in turn. Per group it appends the packet
-    rows and the header ``header_row(batch_id, destination, group, digest)``
-    around ``packet_file_digest``; with ``signing=(pem, key_id)`` the
-    header's signature; with ``containers=(output_root, ts_path)`` the
-    ``.batch.avro`` file and its manifest row. All of it lands in ``staging``
+    rows by ``(batch_id, destination, uuid)``, appends each Arrow batch's
+    rows to the packet leg of their destination, and walks its
+    (batch, destination) groups in turn: per group the header
+    ``header_row(batch_id, destination, group, digest)`` around
+    ``packet_file_digest``; with ``signing=(pem, key_id)`` the header's
+    signature; with ``containers=(output_root, ts_path)`` the
+    ``.batch.avro`` file and its manifest row. The legs land in ``staging``
     at the layout of the final tree: a leg whose file schema has a
     ``destination`` column gets one file per task, any other leg one per
-    task under each ``destination=D``. Each task yields one row: the files
-    it wrote, its packet count, batch ids and conversations, and the min and
-    max of ``ts_col``."""
+    task under each ``destination=D``. A container is one flat file under
+    ``staging/avro``, named by the task attempt, which the commit moves to
+    its path under the root. Each task yields one row: the leg files it
+    wrote, its containers as ``[staged file, path under the root]`` pairs,
+    its packet count, batch ids and conversations, and the min and max of
+    ``ts_col``."""
     ts_type = packets.schema[ts_col].dataType
     result = T.StructType(
         [
             T.StructField("files", T.ArrayType(T.StringType())),
+            T.StructField("containers", T.ArrayType(T.ArrayType(T.StringType()))),
             T.StructField("packets", T.LongType()),
             T.StructField("batch_ids", T.ArrayType(T.StringType())),
             T.StructField("convs", T.ArrayType(T.StringType())),
@@ -492,9 +561,26 @@ def _writer_pass(
                 parts[key] = _PartFile(os.path.join(d, f"{tag}.parquet"), schemas[leg])
             return parts[key]
 
-        files, n_packets, batch_ids, convs, lo, hi = [], 0, set(), set(), None, None
-        for (batch_id, dest), group in group_runs(batches):
-            part("packets", dest).add_table(group)
+        n_packets, lo, hi = 0, None, None
+
+        def packet_rows(batches):
+            # the packet leg and the ts bounds, once per Arrow batch
+            nonlocal n_packets, lo, hi
+            for rb in batches:
+                if not rb.num_rows:
+                    continue
+                dests = rb.column("destination")
+                for dest in pc.unique(dests).to_pylist():
+                    rows = rb.filter(pc.equal(dests, dest))
+                    part("packets", dest).add_table(pa.Table.from_batches([rows]))
+                mm = pc.min_max(rb.column(ts_col))
+                lo = mm["min"].as_py() if lo is None else min(lo, mm["min"].as_py())
+                hi = mm["max"].as_py() if hi is None else max(hi, mm["max"].as_py())
+                n_packets += rb.num_rows
+                yield rb
+
+        staged, batch_ids, convs = [], set(), set()
+        for (batch_id, dest), group in group_runs(packet_rows(batches)):
             name = group.column("conv_id")[0].as_py()
             digest = packet_file_digest(
                 group.column("uuid").to_pylist(),
@@ -516,10 +602,12 @@ def _writer_pass(
                     container_dir("avro", dest, str(name), ts_path),
                     f"{batch_id}.batch.avro",
                 )
-                staged = os.path.join(staging, rel)
-                _mkdirs_in(staging, os.path.dirname(staged))
-                write_file_atomic(staged, blob)
-                files.append(staged)
+                if not staged:
+                    _mkdirs_in(staging, os.path.join(staging, "avro"))
+                path = os.path.join(staging, "avro", f"{tag}-{batch_id}-{dest}.batch.avro")
+                with open(path, "wb") as f:
+                    f.write(blob)
+                staged.append([path, rel])
                 part("avro_manifest", dest).add_row(
                     {
                         "batch_id": batch_id,
@@ -528,12 +616,9 @@ def _writer_pass(
                         "file_sha256": hashlib.sha256(blob).hexdigest(),
                     }
                 )
-            n_packets += group.num_rows
             batch_ids.add(batch_id)
             convs.add(name)
-            mm = pc.min_max(group.column(ts_col))
-            lo = mm["min"].as_py() if lo is None else min(lo, mm["min"].as_py())
-            hi = mm["max"].as_py() if hi is None else max(hi, mm["max"].as_py())
+        files = []
         for p in parts.values():
             p.close()
             files.append(p.path)
@@ -542,6 +627,7 @@ def _writer_pass(
                 [
                     {
                         "files": files,
+                        "containers": staged,
                         "packets": n_packets,
                         "batch_ids": sorted(batch_ids),
                         "convs": sorted(convs),
@@ -607,55 +693,67 @@ def _listed_subtrees(output_root: str, partition: str) -> set[str]:
     return subtrees
 
 
-def _commit(staging: str, output_root: str, partition: str, written: set[str]) -> None:
+def _commit(
+    staging: str,
+    output_root: str,
+    partition: str,
+    written: set[str],
+    containers: list[tuple[str, str]],
+) -> None:
     """Swap the staged output into the tree, after the action succeeded.
-    Files of failed or speculative task attempts — anything the successful
-    attempts did not report — are dropped first. Each staged leg replaces
-    that leg's ``partition`` directory (``window_start_s=W`` or
+    Leg files of failed or speculative task attempts — anything the
+    successful attempts did not report — are dropped first. Each staged leg
+    replaces that leg's ``partition`` directory (``window_start_s=W`` or
     ``epoch=E``); other partitions are not touched. A staged
-    ``avro_manifest`` leg also replaces the container subtrees it fills and
-    those the partition's previous manifest lists, so the commit reads one
+    ``avro_manifest`` leg also replaces the container leaf directories
+    ``avro/{dest}/{name}/YYYY/MM/dd/HH/mm`` that the partition's previous
+    manifest lists and those its ``containers`` — ``(staged file, path
+    under the root)`` pairs — fill: each is moved aside, and each staged
+    container file is moved to its path. So the commit reads one
     partition's manifest instead of listing the container tree. The
     previous output is moved into the staging tree rather than deleted, so
-    if any rename fails, the renames already done are undone and the
-    partition reads back as before."""
-    for base, _, names in os.walk(staging):
-        for n in names:
-            if os.path.join(base, n) not in written:
-                os.remove(os.path.join(base, n))
-    swaps = [  # (final, staged); a missing staged path only removes final
-        (os.path.join(output_root, leg, partition), os.path.join(staging, leg))
-        for leg in LEGS
-        if os.path.isdir(os.path.join(staging, leg))
-    ]
-    if os.path.isdir(os.path.join(staging, "avro_manifest")):
-        subtrees = _listed_subtrees(output_root, partition) | {
-            os.path.relpath(os.path.dirname(f), staging)
-            for f in written
-            if f.endswith(".batch.avro")
+    if any move fails, the moves already done are undone and the partition
+    reads back as before."""
+    for leg in LEGS:
+        for base, _, names in os.walk(os.path.join(staging, leg)):
+            for n in names:
+                if os.path.join(base, n) not in written:
+                    os.remove(os.path.join(base, n))
+    legs = [leg for leg in LEGS if os.path.isdir(os.path.join(staging, leg))]
+    leaves = set()
+    if "avro_manifest" in legs:
+        leaves = _listed_subtrees(output_root, partition) | {
+            os.path.dirname(rel) for _, rel in containers
         }
-        swaps += [
-            (os.path.join(output_root, rel), os.path.join(staging, rel))
-            for rel in sorted(subtrees)
-        ]
     replaced = os.path.join(staging, "replaced")
     os.mkdir(replaced)
-    moved: list[tuple[str, str]] = []
+    undo: list[Callable[[], None]] = []
 
     def move(src: str, dst: str) -> None:
         os.rename(src, dst)
-        moved.append((src, dst))
+        undo.append(lambda: os.rename(dst, src))
 
     try:
-        for i, (final, new) in enumerate(swaps):
+        for leg in legs:
+            final = os.path.join(output_root, leg, partition)
             if os.path.isdir(final):
-                move(final, os.path.join(replaced, str(i)))
-            if os.path.isdir(new):
-                os.makedirs(os.path.dirname(final), exist_ok=True)
-                move(new, final)
+                move(final, os.path.join(replaced, leg))
+            os.makedirs(os.path.dirname(final), exist_ok=True)
+            move(os.path.join(staging, leg), final)
+        for i, rel in enumerate(sorted(leaves)):
+            if os.path.isdir(os.path.join(output_root, rel)):
+                move(os.path.join(output_root, rel), os.path.join(replaced, str(i)))
+        made = set()
+        for src, rel in containers:
+            leaf = os.path.join(output_root, os.path.dirname(rel))
+            if leaf not in made:
+                os.makedirs(leaf)
+                made.add(leaf)
+                undo.append(lambda leaf=leaf: os.rmdir(leaf))
+            move(src, os.path.join(output_root, rel))
     except BaseException:
-        for src, dst in reversed(moved):
-            os.rename(dst, src)
+        for step in reversed(undo):
+            step()
         raise
 
 
@@ -674,8 +772,8 @@ def write_partition(
     protocol of the batch job (``window_start_s=W``) and of the epoch sink
     (``epoch=E``). The writer pass runs on the frame's own partitioning; if
     a batch id comes back from two tasks it runs once more over ``packets``
-    repartitioned by ``batch_id``, and ``_commit`` drops the first pass's
-    files because no result names them. A partition with no packets gets a
+    repartitioned by ``batch_id``, and the first pass's files, which no
+    result names, never reach the tree. A partition with no packets gets a
     zero-row file for each of ``empty_legs``. Returns the task results."""
     with _staging_tree(root) as staging:
 
@@ -689,7 +787,8 @@ def write_partition(
         written = {f for r in results for f in r["files"]}
         if not written:
             written = _write_empty_legs(staging, empty_legs, schemas)
-        _commit(staging, root, partition, written)
+        staged = [(src, rel) for r in results for src, rel in r["containers"]]
+        _commit(staging, root, partition, written, staged)
     return results
 
 
@@ -749,8 +848,8 @@ def run_ingestion(
     if "ts_hour" in df.columns:  # hour-partition pruning, ± grace (S1 analog)
         df = df.filter(F.col("ts_hour").isin(_scan_hours(opts))).drop("ts_hour")
     obs = Observation("invalid")
-    valid, counters = split_valid(df, obs)
-    packets = _packets(valid, opts)
+    annotated = observe_invalid(validate_turns(df), obs)
+    packets = _packets(annotated, opts)
 
     schemas = _leg_schemas(packets)
     legs = LEGS if opts.emit_avro_containers else LEGS[:3]
@@ -791,7 +890,7 @@ def run_ingestion(
     # plan below it, observed scan included, for an empty relation. A window
     # with no packets counts its invalid rows with one small aggregation.
     invalid = obs.get if results else {
-        r["invalid_reason"]: r["n"] for r in counters.collect()
+        r["invalid_reason"]: r["n"] for r in invalid_counters(annotated).collect()
     }
     stats: dict[str, int | str] = {r: n for r, n in invalid.items() if n}
     stats.update(

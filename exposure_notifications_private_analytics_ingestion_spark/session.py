@@ -13,6 +13,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def sql_function(spark: SparkSession, name: str, udf) -> str:
+    """``name``, registered as a temporary SQL function of ``spark`` that
+    runs ``udf`` unless the session already has it, so a statement built
+    per window does not re-register (and re-ship) the same function."""
+    if not spark.catalog.functionExists(name):
+        spark.udf.register(name, udf)
+    return name
+
+
 def iceberg_confs(warehouse: str = "/tmp/enpa-iceberg-warehouse") -> dict[str, str]:
     """Session confs for a local Iceberg hadoop catalog — applied by
     ``get_spark`` automatically when an iceberg-spark-runtime jar is found

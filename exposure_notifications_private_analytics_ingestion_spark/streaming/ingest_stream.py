@@ -447,6 +447,9 @@ def closed_batches_stream(
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+HDFS_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+)
 
 # Options whose change across a checkpoint resume corrupts or silently
 # reinterprets existing state: bucket_by/mode change the state KEY SPACE and
@@ -529,19 +532,22 @@ def start_stream_ingestion(
 ):
     """Full streaming job: CEP core → packet split → idempotent epoch sink.
 
-    State store defaults to RocksDB (spill-to-disk, changelog checkpointing)
+    State store defaults to RocksDB (spill-to-disk; each commit uploads a
+    snapshot of the changed files — changelog checkpointing is not enabled)
     — at 10^12 turns the per-conv dedup/buffer state cannot live in the
-    HDFS-backed in-memory map. The provider is per-query-start config and is
-    recorded in the checkpoint; resuming keeps whatever the checkpoint used.
+    HDFS-backed in-memory map; ``rocksdb_state=False`` picks that map. The
+    provider is session config, set at every start whichever it is, so an
+    earlier start's choice never carries over; a new checkpoint records it,
+    and resuming keeps whatever the checkpoint used.
     """
     from .sink import make_epoch_sink
 
     opts = opts or StreamOptions()
     _guard_checkpoint_options(spark, checkpoint, opts)
-    if rocksdb_state:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        ROCKSDB_PROVIDER if rocksdb_state else HDFS_PROVIDER,
+    )
     dlq_query = None
     if opts.invalid_path:
         dlq_query = _start_dlq_stream(

@@ -120,7 +120,7 @@ def test_signature_verify_fails_closed_without_signature_columns(spark):
     pdf = generate_turns(n_convs=2, seed=1, dup_frac=0.0)
     df = spark.createDataFrame(pdf)
     with pytest.raises(ValueError, match="refusing to fail open"):
-        signature_verify_attestation(df)
+        signature_verify_attestation(spark, "turns", df.columns)
 
 
 def test_empty_and_nonempty_windows_share_one_readback_schema(spark, tmp_path):

@@ -12,6 +12,7 @@ checkpoint."""
 
 from __future__ import annotations
 
+import base64
 import uuid
 from datetime import datetime, timedelta, timezone
 from typing import NamedTuple
@@ -26,6 +27,7 @@ from pyspark.sql import functions as F
 
 from exposure_notifications_private_analytics_ingestion_spark.functions.hashing import NAMESPACE
 from exposure_notifications_private_analytics_ingestion_spark.model.schema import (
+    PRIME,
     TURNS_SCHEMA,
     TURNS_WITH_PAYLOAD_SCHEMA,
 )
@@ -200,6 +202,76 @@ def test_exact_path_plans_one_exchange(spark, payload, attestation):
     packets, _, _ = process_turns(df, IngestionOptions(attestation=attestation))
     plan = packets._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
+
+
+SIGNATURE = st.sampled_from([None, "", "s", "t"])
+PRIO = {"prime": PRIME, "epsilon": 5.2933, "bins": 2, "number_servers": 2, "hamming_weight": 1}
+
+
+@st.composite
+def prio_scenarios(draw):
+    """(documents, window_start_s): the turns of ``scenarios`` as Prio
+    documents, each with a signature that may be missing or empty."""
+    turns, start = draw(scenarios())
+    return [(t, draw(SIGNATURE)) for t in turns], start
+
+
+def prio_model(docs: list[tuple[Turn, str | None]], start_s: int, batch_size: int, attested: bool):
+    """``model`` for Prio documents whose shares carry the turn text:
+    validate needs ts and a signature; the dedup order runs on over the
+    signature (the columns after it are equal when the text is); with
+    attestation the window's winners need a non-empty signature; the chunk
+    key adds the Prio parameters to the conversation."""
+    winners: dict[tuple, tuple[Turn, str]] = {}
+    for t, sig in docs:
+        if t.ts_us is None or sig is None:
+            continue
+        k = (t.conv_id, t.turn_idx)
+        order = [_nulls_first(v) for v in (*t[2:], sig)]
+        if k not in winners or order < [_nulls_first(v) for v in (*winners[k][0][2:], winners[k][1])]:
+            winners[k] = (t, sig)
+    lo, hi = start_s * 1000, (start_s + DUR) * 1000
+    kept = sorted(
+        (t for t, sig in winners.values() if lo <= t.ts_us // 1000 < hi and (sig or not attested)),
+        key=lambda t: (t.conv_id, t.turn_idx),
+    )
+    key = "\x1f".join(str(PRIO[f]) for f in ("bins", "epsilon", "hamming_weight", "prime"))
+    rows, seen = [], {}
+    for t in kept:
+        o = seen.get(t.conv_id, 0) // batch_size
+        seen[t.conv_id] = seen.get(t.conv_id, 0) + 1
+        bid = str(uuid.uuid5(NAMESPACE, f"{t.conv_id}\x1f{key}|{start_s}|{o}"))
+        rows.append((f"{t.conv_id}#{t.turn_idx}", t.ts_us, (t.text or "").encode(), bid))
+    return _frame(rows)
+
+
+@pytest.mark.parametrize(
+    "attestation", [None, "signature_presence"], ids=["default", "attested"]
+)
+@settings(max_examples=6, deadline=None)
+@given(prio_scenarios())
+@example(([(t, "s" if i % 3 else "") for i, t in enumerate(CONFLICTS[0])], START))
+def test_prio_paths_match_the_model(spark, attestation, scenario):
+    """The core statement's Prio option sets, plain and attested, against
+    ``prio_model``: winner payload, event time and batch id."""
+    docs, start = scenario
+    rows = []
+    for t, sig in docs:
+        share = {"encryption_key_id": "k", "payload": base64.b64encode((t.text or "").encode()).decode()}
+        ts = None if t.ts_us is None else EPOCH + timedelta(microseconds=t.ts_us)
+        rows.append((*t[:5], ts, sig, ["cert"], 2, PRIO, [share, share]))
+    df = spark.createDataFrame(rows, schema=TURNS_WITH_PAYLOAD_SCHEMA)
+    opts = IngestionOptions(
+        window_start_s=start, duration_s=DUR, batch_size=BATCH, attestation=attestation
+    )
+    got = process_turns(df, opts)[0].filter("destination = 'pha'")
+    emitted = _frame(
+        (u, ts, bytes(p), b)
+        for u, ts, p, b in got.select(
+            "uuid", F.expr("unix_micros(ts)"), "encrypted_payload", "batch_id"
+        ).collect()
+    )
+    assert_frame_equal(emitted, prio_model(docs, start, BATCH, attestation is not None))
 
 
 def first_arrival_model(epochs: list[list[Turn]], batch_size: int, window_s: int) -> pd.DataFrame:

@@ -347,3 +347,40 @@ def test_bridge_merge_never_reemits_already_closed_turns(spark, tmp_path):
     # every turn exactly once — in particular turn 1 (emitted by A's
     # size-close, duplicated into B's buffer) must NOT appear twice
     assert sorted(pha["turn_idx"]) == [0, 1, 10, 25]
+
+
+def _offset_log_conf(ckpt) -> dict:
+    """The session confs the first offset log entry of a checkpoint records."""
+    import json
+
+    with open(ckpt / "offsets" / "0") as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]
+
+
+def test_state_store_provider_is_set_at_every_start(spark, tmp_path):
+    """rocksdb_state=False after a RocksDB start in the same session gets
+    the HDFS-backed store: each new checkpoint records the provider its own
+    start asked for."""
+    from exposure_notifications_private_analytics_ingestion_spark.streaming.ingest_stream import (
+        HDFS_PROVIDER,
+        ROCKSDB_PROVIDER,
+    )
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    inp = str(tmp_path / "in")
+    _write(spark, pd.DataFrame([_turn("c", i, 10 * i) for i in range(3)]), inp)
+    was = spark.conf.get(key, None)
+    try:
+        for rocksdb, provider in ((True, ROCKSDB_PROVIDER), (False, HDFS_PROVIDER)):
+            ckpt = tmp_path / f"ckpt-{rocksdb}"
+            q = start_stream_ingestion(
+                spark, inp, str(tmp_path / f"out-{rocksdb}"), str(ckpt),
+                StreamOptions(batch_size=10), rocksdb_state=rocksdb,
+            )
+            q.awaitTermination(240)
+            assert _offset_log_conf(ckpt)[key] == provider
+    finally:
+        if was is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, was)

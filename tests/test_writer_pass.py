@@ -3,9 +3,9 @@ DataFrame definitions they replace (build_headers, build_signatures,
 sign_headers' verifier, write_batch_containers, split_valid), empty windows
 that leave other windows alone, a re-run failing in the writer or in the
 commit that leaves the previous output as it was, the local output root,
-an atomic signing_key.json, the number of Spark jobs one window costs, and
-the writer riding the core's exchange (one by batch id on the hot-key
-path)."""
+an atomic signing_key.json, the number of Spark jobs and py4j calls one
+window costs, and the writer riding the core's exchange (one by batch id on
+the hot-key path)."""
 
 from __future__ import annotations
 
@@ -287,22 +287,28 @@ def test_failed_rerun_leaves_previous_output(spark, tmp_path, monkeypatch):
     assert _leftovers(out) == []
 
 
-def test_failed_commit_restores_previous_output(spark, tmp_path, monkeypatch):
-    """A rename that fails mid-commit — here the first container subtree,
-    after all four legs were swapped — undoes the renames before it."""
+@pytest.mark.parametrize("fail_at", [0, 5], ids=["first-container", "later-container"])
+def test_failed_commit_restores_previous_output(spark, tmp_path, monkeypatch, fail_at):
+    """A move that fails mid-commit — here a container file, after all four
+    legs were swapped and the previous containers moved aside, the first
+    one or one after five others were moved into place — undoes the moves
+    before it."""
     inp, out, opts, before = _rerun_setup(spark, tmp_path)
-    real, failed = os.rename, []
+    real, moved, failed = os.rename, [], []
 
     def rename(src, dst):
         if not failed and dst.startswith(os.path.join(out, "avro", "")):
-            failed.append(dst)
-            raise OSError(errno.EXDEV, "injected cross-device rename", dst)
+            if len(moved) == fail_at:
+                failed.append(dst)
+                raise OSError(errno.EXDEV, "injected cross-device rename", dst)
+            moved.append(dst)
         return real(src, dst)
 
     monkeypatch.setattr(ingestion.os, "rename", rename)
     with pytest.raises(OSError, match="injected cross-device rename"):
         run_ingestion(spark, inp, out, opts)
     monkeypatch.undo()
+    assert failed[0].endswith(".batch.avro") and len(moved) == fail_at
     assert _snapshot(spark, out) == before
     assert _leftovers(out) == []
 
@@ -348,6 +354,35 @@ def test_one_window_runs_at_most_three_spark_jobs(spark, tmp_path):
     assert int(stats["packets_written"]) > 0
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 3, f"{len(jobs)} Spark jobs for one window"
+
+
+def test_warm_window_makes_few_py4j_calls(spark, tmp_path, monkeypatch):
+    """The core is one SQL statement and the writer one action, so a warm
+    window's driver makes at most 200 py4j calls (building the core from
+    Column expressions made about 840)."""
+    from py4j.java_gateway import JavaMember
+
+    inp = _prio_corpus(spark, str(tmp_path / "docs"))
+    out = str(tmp_path / "out")
+    opts = IngestionOptions(
+        window_start_s=JAN,
+        duration_s=3 * 3600,
+        batch_size=6,
+        emit_avro_containers=True,
+        signing_key_pem=generate_signing_key_pem("py4j-test"),
+    )
+    run_ingestion(spark, inp, out, opts)
+    calls, real = [], JavaMember.__call__
+
+    def counting(self, *args):
+        calls.append(self.name)
+        return real(self, *args)
+
+    monkeypatch.setattr(JavaMember, "__call__", counting)
+    stats = run_ingestion(spark, inp, out, opts)
+    monkeypatch.undo()
+    assert int(stats["packets_written"]) > 0
+    assert len(calls) <= 200, f"{len(calls)} py4j calls"
 
 
 def _writer_inputs(monkeypatch) -> list:
